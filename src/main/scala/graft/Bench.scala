@@ -51,33 +51,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      // Bench-scale split sizing: the sf0.1 tables are single ~10-30 MB
-      // parquet files — at the 128 MB default each scan is ONE task and
-      // CPU-bound queries run single-threaded. 4 MB splits engage the
-      // cores; a real cluster at 100 TB keeps the default (row groups
-      // there are plentiful).
-      .config("spark.sql.files.maxPartitionBytes", 4 * 1024 * 1024)
-      .config("spark.sql.files.openCostInBytes", 1024 * 1024)
-      // CPU-heavy text tables (documents ≈ 6 MB at the 10× point) would
-      // otherwise get 1-2 splits — force at least one split per core so
-      // row-local scans engage the full machine
-      .config("spark.sql.files.minPartitionNum", cpus)
-      .config("spark.ui.enabled", "false")
-      // index-build bench lines write catalog tables — keep them off cwd
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-bench-wh").toString)
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
 
     val suiteT0 = System.nanoTime()

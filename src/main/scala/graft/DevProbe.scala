@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import Bench.force
 
 /** Dev tool (optimization rounds): time labeled sub-stages of the hot
   * query chains through the noop sink — the guide §1 decomposition step
@@ -15,25 +16,9 @@ object DevProbe {
   def main(args: Array[String]): Unit = {
     val probe = args(0)
     val sfDir = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.sql.files.maxPartitionBytes", 4 * 1024 * 1024)
-      .config("spark.sql.files.openCostInBytes", 1024 * 1024)
-      .config("spark.sql.files.minPartitionNum", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
 
-    def force(df: DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
     def time(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }
@@ -203,7 +188,8 @@ object DevProbe {
 
       // generic shuffle-volume probe (r13): run named SparkEntry queries
       // once through the noop sink and report total shuffle read/write
-      // bytes (the CorpusScaleSmoke listener) — the §2.3 evidence for
+      // bytes (the stage listener behind BASELINE.md "Round-6: x100
+      // corpus smoke") — the §2.3 evidence for
       // byte-diet changes whose wall delta sits inside local-mode noise.
       case "shuffle" =>
         val shufW = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -224,7 +210,8 @@ object DevProbe {
           spark.sparkContext.setJobDescription(q)
           force(SparkEntry.queries(q)(spark, sfDir))
           // listener events drain asynchronously — settle before reading
-          // (the CorpusScaleSmoke convention; listenerBus is private[spark])
+          // (as the x100 smokes in BASELINE.md did; listenerBus is
+          // private[spark])
           Thread.sleep(1000)
           println(f"SHUFFLE $q%-36s write ${shufW.get / 1024.0 / 1024.0}%9.2f MB" +
             f"  read ${shufR.get / 1024.0 / 1024.0}%9.2f MB")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev tool: write `.explain("formatted")` output for named SparkEntry
@@ -9,31 +8,33 @@ import org.apache.spark.sql.execution.ExplainMode
   *
   * Usage: tools/run_class.sh graft.PlanFormat <q1,q2,...|all> <sfDir> <outDir> [suffix]
   *
-  * Writes <outDir>/<query>_<suffix>.txt (suffix defaults to "plan").
-  * The session mirrors Bench's config (AQE, 64 MB broadcast threshold,
-  * small-file splits) so the dumped plan is the one the bench executes.
+  * Writes <outDir>/<query>_<suffix>.txt (suffix defaults to "plan"): a
+  * header line of operator counts over the executed plan, then the
+  * formatted plan. The session is Bench's, so the dumped plan is the one
+  * the bench executes.
   */
 object PlanFormat {
+  // operator → the node name the plan prints. Letter-anchored: a bare
+  // "Exchange" would also match every ReusedExchange/BroadcastExchange,
+  // inflating the shuffle count.
+  private val counted = Seq("Exchange" -> "Exchange",
+    "ReusedExchange" -> "ReusedExchange",
+    "BroadcastExchange" -> "BroadcastExchange",
+    "SortMergeJoin" -> "SortMergeJoin",
+    "BroadcastHashJoin" -> "BroadcastHashJoin", "WindowExec" -> "Window")
+
+  private def counts(plan: String): String = counted
+    .map { case (op, node) =>
+      s"$op=${s"(?<![A-Za-z])$node(?![A-Za-z])".r.findAllIn(plan).size}"
+    }
+    .mkString("# ", " ", "")
+
   def main(args: Array[String]): Unit = {
     val names = args(0)
     val sfDir = args(1)
     val outDir = args(2)
     val suffix = if (args.length > 3) args(3) else "plan"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.sql.files.maxPartitionBytes", 4 * 1024 * 1024)
-      .config("spark.sql.files.openCostInBytes", 1024 * 1024)
-      .config("spark.sql.files.minPartitionNum", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     val selected =
       if (names == "all") SparkEntry.queries.keys.toSeq.sorted
@@ -41,8 +42,9 @@ object PlanFormat {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     selected.foreach { name =>
       try {
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        val txt = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+        val qe = SparkEntry.queries(name)(spark, sfDir).queryExecution
+        val txt = counts(qe.executedPlan.toString) + "\n" +
+          qe.explainString(ExplainMode.fromString("formatted"))
         java.nio.file.Files.write(
           java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt"),
           txt.getBytes(java.nio.charset.StandardCharsets.UTF_8))

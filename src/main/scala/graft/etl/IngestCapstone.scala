@@ -3,6 +3,7 @@ package graft.etl
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.operators.{Dedup, DriftMonitor, NaiveBayes, SegmentDedup}
 
 /** The incremental-pipeline capstone (r12, VERDICT r11 #1): one batch
@@ -375,8 +376,7 @@ object IngestCapstone {
       pre.filter(col("__pre").isNull).select(col(idCol)),
       Seq(idCol), "left_semi")
     val nb = NaiveBayes.classifyIncremental(
-        scala.concurrent.Await.result(whWordCountsF,
-          scala.concurrent.duration.Duration.Inf),
+        scala.concurrent.Await.result(whWordCountsF, GraftSession.driverWait),
         state.nbDocCounts,
         survivors, idCol, labelCol, textCol)
       .select(col(idCol), col("predicted"), col("margin_e16"))
@@ -385,8 +385,7 @@ object IngestCapstone {
     //    computed by the concurrent leg above
     (pre,
       nb,
-      scala.concurrent.Await.result(psiF,
-        scala.concurrent.duration.Duration.Inf))
+      scala.concurrent.Await.result(psiF, GraftSession.driverWait))
     // shutdown lets in-flight side jobs finish; a main-thread failure
     // must not interrupt a Spark job mid-stage, only stop the threads
     } finally pool.shutdown()

@@ -106,10 +106,6 @@ object Pipeline {
         (size(coalesce(col("image_urls"), array())) > 0 ||
           col("price_current").isNotNull))
 
-  /** T2 (supabase_loader.py:181-191): freshness stamping on every write. */
-  def stampTimestamps(df: DataFrame, cols: Seq[String] = Seq("scraped_at", "updated_at")): DataFrame =
-    cols.foldLeft(df)((acc, c) => acc.withColumn(c, current_timestamp()))
-
   /** P9 — variant-group representative selection (pipeline.py:342-567):
     * group by `coalesce(parent_id, id)`, pick the member with the most
     * images (ties: smallest id), return (group_key, representative id).

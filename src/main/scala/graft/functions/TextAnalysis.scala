@@ -63,15 +63,6 @@ object TextAnalysis {
     size(filter(toks, t => array_contains(sw, t))).cast("double") / size(toks)
   }
 
-  /** Punctuation-character ratio over the raw text. */
-  def punctRatio(text: Column): Column =
-    length(regexp_replace(text, "[^.,;:!?'\"()\\[\\]{}-]", "")).cast("double") /
-      length(text)
-
-  /** Mean token length in characters. */
-  def meanTokenLen(toks: Column): Column =
-    contentChars(toks).cast("double") / size(toks)
-
   /** Composite quality score in [0,1]: shortness-penalized diversity with
     * stopword sanity band — deterministic, IEEE-only arithmetic. */
   def qualityScore(text: Column, stopwords: Seq[String]): Column =

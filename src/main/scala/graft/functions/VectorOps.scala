@@ -35,14 +35,4 @@ object VectorOps {
       .when(den === 0.0, 0.0)
       .otherwise(num / den)
   }
-
-  /** Cosine scaled to an exact integer at 1e-6 resolution — immune to
-    * sub-ulp cross-engine formula differences when hash-compared. */
-  def cosineE6(a: Column, b: Column): Column =
-    floor(cosine(a, b) * 1e6).cast("long")
-
-  /** Euclidean distance. */
-  def euclidean(a: Column, b: Column): Column =
-    sqrt(aggregate(zip_with(asDouble(a), asDouble(b), (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, x) => acc + x))
 }

@@ -52,28 +52,7 @@ final case class CanonicalTags(
     topLayerRole: Option[String] = None,
     shoeType: Option[String] = None,
     profile: Option[String] = None,
-    closure: Option[String] = None) {
-
-  /** Field-name→value map mirroring `to_dict` (tag_policy.py:398-435):
-    * None/empty fields omitted, reference key names and insertion order. */
-  def toFieldMap: Map[String, Any] = {
-    val b = scala.collection.mutable.LinkedHashMap[String, Any]("category" -> category)
-    if (styleIdentity.nonEmpty) b += "style_identity" -> styleIdentity
-    fit.foreach(b += "fit" -> _)
-    silhouette.foreach(b += "silhouette" -> _)
-    length.foreach(b += "length" -> _)
-    if (context.nonEmpty) b += "context" -> context
-    if (constructionDetails.nonEmpty) b += "construction_details" -> constructionDetails
-    pattern.foreach(b += "pattern" -> _)
-    if (pairingTags.nonEmpty) b += "pairing_tags" -> pairingTags
-    formality.foreach(b += "formality" -> _)
-    topLayerRole.foreach(b += "top_layer_role" -> _)
-    shoeType.foreach(b += "shoe_type" -> _)
-    profile.foreach(b += "profile" -> _)
-    closure.foreach(b += "closure" -> _)
-    b.toMap
-  }
-}
+    closure: Option[String] = None)
 
 final case class SuppressedTag(field: String, tag: String, confidence: Double, reason: String)
 

@@ -174,8 +174,9 @@ object BloomFilters {
     * bounded at one call's corpus, lazy, repeated identical calls —
     * the bench shape and the production batch-probe loop — reuse the
     * blocks. At warehouse scale the same role is played by the
-    * PERSISTED train-shingle table (DecontamWarehouseSmoke); the
-    * registry is the in-session equivalent for one-shot callers. */
+    * PERSISTED train-shingle table (BASELINE.md "Round-8: x100
+    * span/contamination dossier", amortized regime); the registry is
+    * the in-session equivalent for one-shot callers. */
   private val registry = new CacheRegistry
 
   /** Release the retained train-key cache and the survivors memo
@@ -234,9 +235,9 @@ object BloomFilters {
     * side explicitly: they are miss-pruned to near the true-hit count
     * — the structural guarantee the bitmap buys — and the hint is what
     * keeps the train side un-shuffled (AQE alone converts to broadcast
-    * only AFTER the train shuffle is written; DecontamWarehouseSmoke
-    * measured 872 MB/batch with AQE's late conversion vs batch-sized
-    * with the hint).
+    * only AFTER the train shuffle is written; BASELINE.md "Round-8:
+    * x100 span/contamination dossier" measured 872 MB/batch with AQE's
+    * late conversion vs batch-sized with the hint).
     *
     * The broadcast is GUARDED, not assumed (r8 VERDICT #2): "survivors
     * are tiny" is a sizing claim, and a heavily-contaminated probe

@@ -23,11 +23,6 @@ object Sampling {
     conv(substring(md5(concat(id.cast("string"), lit(":" + salt))), 1, 4), 16, 10)
       .cast("int")
 
-  /** Keep ≈`rate` of rows, deterministically: slot < rate·65536. */
-  def hashSample(df: DataFrame, idCol: String, rate: Double,
-                 salt: String = "graft"): DataFrame =
-    df.filter(hashSlot(col(idCol), salt) < math.round(rate * 65536).toInt)
-
   /** Per-stratum rates: unlisted strata use `defaultRate`. Rate control
     * is a row-local when-chain — one scan, no shuffle, no per-stratum
     * passes. */

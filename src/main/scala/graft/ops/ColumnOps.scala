@@ -80,10 +80,6 @@ object ColumnOps {
   def confidenceClamp(c: Column): Column =
     least(greatest(coalesce(c.cast("double"), lit(0.5)), lit(0.0)), lit(1.0))
 
-  /** X15 (refitd_tagger.py:1155-1164): first `{...}` block in raw text. */
-  def jsonBlockExtract(c: Column): Column =
-    nullif(regexp_extract(c, "(\\{[\\s\\S]*\\})", 1), lit(""))
-
   /** X19 (export_training_data.py:35-37): `max(1, len(text)//4)`. */
   def tokenEstimate(c: Column): Column =
     greatest(lit(1L), floor(length(c) / 4).cast("long"))
@@ -210,9 +206,4 @@ object ColumnOps {
     * decreasing in age, 1.0 when fresh, 0.5 at tau. */
   def freshnessScore(ageDays: Column, tauDays: Column): Column =
     lit(1.0) / (lit(1.0) + ageDays.cast("double") / tauDays.cast("double"))
-
-  /** T3 exponential variant for engine users (not oracle-checked —
-    * libm exp() differs across platforms in the last ulp). */
-  def freshnessScoreExp(ageDays: Column, tauDays: Column): Column =
-    exp(-ageDays.cast("double") / tauDays.cast("double"))
 }

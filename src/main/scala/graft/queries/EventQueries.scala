@@ -265,18 +265,19 @@ object EventQueries {
     // job floor on 10 MB of de-duplicated pairs — engine floor, plan
     // asserted in PlanSpec.
     //
-    // r5 (EventScaleSmoke finding): the repartition below is the scale
-    // fix. distinct alone partitions by (user_id, day); the first-day
-    // aggregate and the join then need user_id partitioning, and once
-    // the per-user table outgrows the broadcast threshold the join
-    // re-shuffles the whole pair table (x100 smoke: shuffle bytes
-    // 2.8 → 82 MB for 10× data — super-linear). Declaring the exchange
-    // on user_id ONCE lets the distinct (subset-key distribution), the
-    // first-day aggregate, and the join all reuse it — shuffle returns
-    // to stream-linear with NO broadcastability assumption on the user
-    // table (the 100 TB case). Measured: x100 1.22-1.40 → 0.98-1.01 s;
-    // x10 parity (0.47-0.50 both); sf0.1 +0.04 s (job floor, the
-    // broadcast join it replaces was free at that size).
+    // r5 (BASELINE.md "Round-5: x100 event smoke"): the repartition
+    // below is the scale fix. distinct alone partitions by (user_id,
+    // day); the first-day aggregate and the join then need user_id
+    // partitioning, and once the per-user table outgrows the broadcast
+    // threshold the join re-shuffles the whole pair table (x100 smoke:
+    // shuffle bytes 2.8 → 82 MB for 10× data — super-linear). Declaring
+    // the exchange on user_id ONCE lets the distinct (subset-key
+    // distribution), the first-day aggregate, and the join all reuse
+    // it — shuffle returns to stream-linear with NO broadcastability
+    // assumption on the user table (the 100 TB case). Measured: x100
+    // 1.22-1.40 → 0.98-1.01 s; x10 parity (0.47-0.50 both); sf0.1
+    // +0.04 s (job floor, the broadcast join it replaces was free at
+    // that size).
     val e = events(s, d)
       .select(col("user_id"), expr(s"ts div ${DayNs}L").as("day"))
       .repartition(col("user_id"))

@@ -338,7 +338,8 @@ object TrainingQueries {
   // fact rather than a scaladoc claim. Bloom sizing is the q113
   // bench-scale convention (exactness holds at ANY sizing — only the
   // pruning rate varies); the x100 sizing and the amortized byte
-  // profile live in DecontamWarehouseSmoke (BASELINE.md). The operator
+  // profile are in BASELINE.md "Round-8: x100 span/contamination
+  // dossier". The operator
   // retains the train-shingle corpus for the call (CacheRegistry) and
   // broadcast-verifies the pruned survivors — the smoke's measured
   // steady-batch shape.

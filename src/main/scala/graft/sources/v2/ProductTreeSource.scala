@@ -179,8 +179,8 @@ case class ProductTreeScan(root: String, brand: String, required: StructType,
     // listed — and the globs run in parallel: listing latency (not
     // parsing) dominates a many-category tree, and each glob is an
     // independent namenode/object-store round trip
-    // (ConnectorScaleSmoke: 200 sequential globs cost 1.7 s of a 2.0 s
-    // full read at 40k docs)
+    // (BASELINE.md "Round-4: V2 connector listing smoke": 200
+    // sequential globs cost 1.7 s of a 2.0 s full read at 40k docs)
     if (cats.length <= 1) {
       cats.flatMap { c =>
         fs.globStatus(new Path(c, "*/metadata.json"))

@@ -110,8 +110,8 @@ class BloomFiltersSpec extends SparkSpec {
     // the perf contract behind the q158 shape: the train side is
     // scanned but never shuffled in the verify — the survivors ride a
     // BroadcastHashJoin build side (AQE's own conversion would land
-    // only after the train shuffle is written; DecontamWarehouseSmoke
-    // measured 872 MB/batch that way)
+    // only after the train shuffle is written; BASELINE.md "Round-8:
+    // x100 span/contamination dossier" measured 872 MB/batch that way)
     val train = (0 until 500).map(i => s"t$i").toDF("shingle")
     val eval_ = (1 to 20).map(i => (1L, s"t$i")).toDF("doc_id", "shingle")
     val plan = BloomFilters.verifiedHitsBloomPruned(train, eval_,

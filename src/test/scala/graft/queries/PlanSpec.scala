@@ -152,8 +152,9 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("SinglePartition"), p)
     // the event stream is shuffled on user_id exactly ONCE: the second
     // branch must consume a ReusedExchange, not re-shuffle (the x100
-    // super-linear shuffle cliff EventScaleSmoke caught in r5 — once the
-    // per-user table outgrew broadcast, the join re-shuffled every pair)
+    // super-linear shuffle cliff in BASELINE.md "Round-5: x100 event
+    // smoke" — once the per-user table outgrew broadcast, the join
+    // re-shuffled every pair)
     val streamShuffles = p.linesIterator.count(l =>
       l.contains("REPARTITION_BY_COL") && !l.contains("ReusedExchange"))
     assert(streamShuffles == 1,
