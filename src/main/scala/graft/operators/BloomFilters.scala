@@ -164,35 +164,17 @@ object BloomFilters {
     survivors.toDF(idCol, keyCol)
   }
 
-  /** One-call registry for the twice-consumed train-key corpus: every
-    * pruned-verify composition below reads `trainKeys` once to
-    * aggregate the bitmaps and once to verify survivors, and the RDD
-    * boundary inside [[probePartitionedBitmaps]] (zipPartitions) hides
-    * the first subtree from Catalyst's ReusedExchange matching — so
-    * without a cache the train explode+distinct runs twice per action.
-    * Same lifecycle contract as SetSimJoin's (see [[CacheRegistry]]):
-    * bounded at one call's corpus, lazy, repeated identical calls —
-    * the bench shape and the production batch-probe loop — reuse the
-    * blocks. At warehouse scale the same role is played by the
-    * PERSISTED train-shingle table (BASELINE.md "Round-8: x100
-    * span/contamination dossier", amortized regime); the registry is
-    * the in-session equivalent for one-shot callers. */
-  private val registry = new CacheRegistry
-
-  /** Release the retained train-key cache and the survivors memo
-    * (idempotent). */
-  def releaseCache(): Unit = synchronized {
-    registry.release()
-    survivorsMemo = None
-  }
-
-  /** Test observability (BloomFiltersSpec pins the one-corpus bound). */
-  private[operators] def retainedFrames: Seq[DataFrame] =
-    registry.retainedFrames
-
-  /** Test observability (BloomFiltersSpec pins the one-slot memo reuse). */
-  private[operators] def memoSurvivorFrame: Option[DataFrame] =
-    synchronized(survivorsMemo.map(_._2))
+  // Both pruned-verify compositions below pin `trainKeys` for the call:
+  // they read it once to aggregate the bitmaps and once to verify
+  // survivors, and the RDD boundary inside [[probePartitionedBitmaps]]
+  // (zipPartitions) hides the first subtree from Catalyst's
+  // ReusedExchange matching — so without the pin the train
+  // explode+distinct runs twice per call (sf0.1 Bench warm medians, 4
+  // cores: q113 1.42 s pinned vs 1.58 s recomputed, q158 1.16 vs 1.50).
+  // Nothing is kept for the next call: at warehouse scale the reuse
+  // across probe batches is the caller's PERSISTED train-shingle table
+  // (BASELINE.md "Round-8: x100 span/contamination dossier", amortized
+  // regime).
 
   /** Exact contamination through the partitioned-bloom pruner: the
     * bitmap drops definite-miss keys (the bulk, at any real dup rate),
@@ -205,7 +187,7 @@ object BloomFilters {
                                idCol: String, keyCol: String,
                                expectedItemsPerPart: Long, numBitsPerPart: Long,
                                numPartitions: Int = 64): DataFrame = {
-    val Seq(train) = registry.retainAll(Seq(trainKeys))
+    val train = trainKeys.localCheckpoint(true)
     val totals = evalKeyed
       .select(col(idCol).cast("long").as(idCol))
       .groupBy(col(idCol)).agg(count(lit(1)).as("n_shingles"))
@@ -243,67 +225,38 @@ object BloomFilters {
     * are tiny" is a sizing claim, and a heavily-contaminated probe
     * stream or an undersized bitmap breaks it — an unconditional
     * `broadcast()` then OOMs the driver at production scale. The
-    * survivors are persisted (the call-scoped registry, alongside the
-    * train corpus) and counted by ONE parallel aggregate job; at or
-    * below `maxBroadcastSurvivorRows` the verify join broadcasts the
-    * cached survivors, above it the same join runs as a shuffle join —
-    * still exact, still bitmap-pruned, just paying the train-side
-    * exchange the honest sizing would have avoided.
+    * survivors are pinned for the call (recomputing them for the join
+    * re-runs the bitmap build: q158 1.84 s vs 1.72 s pinned, sf0.1)
+    * and counted by ONE parallel job; at or below
+    * `maxBroadcastSurvivorRows` the verify join broadcasts the pinned
+    * survivors, above it the same join runs as a shuffle join — still
+    * exact, still bitmap-pruned, just paying the train-side exchange
+    * the honest sizing would have avoided.
     *
-    * The guard's price on a COLD call is the count job plus the
-    * survivors' cache round-trip — linear in the survivor set, not the
-    * probe stream (the probe pass was already paid by the broadcast
-    * materialization it replaces); measured +0.2-0.3 s at sf0.1's job
-    * floors (interleaved bench-protocol A/B, BASELINE r9 — an earlier
-    * phase-probe A-B-A misread this as noise; the bench numbers are
-    * authoritative). On a REPEATED identical call — the bench shape,
-    * and the amortized-warehouse production shape (probe batches
-    * against one train corpus) — the survivors and their count are
-    * memoized in a one-slot keyed cache beside the registry (the
-    * survivors plan ends at an RDD `zipPartitions` boundary, so
-    * CacheManager's canonicalized-plan matching can never reuse it
-    * across calls; keying on the INPUT plans + sizing restores the
-    * reuse the r7 cache registry was built for), making warm calls
-    * cheaper than the unguarded shape ever was. (A bounded
-    * `limit(max+1).collect()` decider was tried first — executeTake's
-    * incremental partition batches serialize the reduce side and
-    * measured ~2× worse than the parallel count.) Default threshold
-    * ~1M rows ≈ 100 MB of 13-gram survivors on the driver — size to
-    * driver memory, and size the BITMAPS to make the fallback
+    * The guard's price is the count job — linear in the survivor set,
+    * not the probe stream (the probe pass was already paid by the
+    * broadcast materialization it replaces); measured +0.2-0.3 s at
+    * sf0.1's job floors (interleaved bench-protocol A/B, BASELINE r9).
+    * (A bounded `limit(max+1).collect()` decider was tried first —
+    * executeTake's incremental partition batches serialize the reduce
+    * side and measured ~2× worse than the parallel count.) Default
+    * threshold ~1M rows ≈ 100 MB of 13-gram survivors on the driver —
+    * size to driver memory, and size the BITMAPS to make the fallback
     * unreachable. */
   def verifiedHitsBloomPruned(trainKeys: DataFrame, probes: DataFrame,
                               idCol: String, keyCol: String,
                               expectedItemsPerPart: Long, numBitsPerPart: Long,
                               numPartitions: Int = 64,
-                              maxBroadcastSurvivorRows: Long = 1L << 20): DataFrame =
-    synchronized {
-      // memo key: input PLANS + sizing (NOT the threshold — the same
-      // survivors serve any threshold; only the join strategy changes)
-      val memoKey: Seq[Any] = Seq(
-        trainKeys.queryExecution.analyzed.canonicalized,
-        probes.queryExecution.analyzed.canonicalized,
-        idCol, keyCol, expectedItemsPerPart, numBitsPerPart, numPartitions)
-      val (survivors, nSurvivors) = survivorsMemo match {
-        case Some((k, df, n)) if k == memoKey =>
-          registry.retainAll(Seq(trainKeys, df)) // keep both retained
-          (df, n)
-        case _ =>
-          val Seq(_, s) = registry.retainAll(Seq(trainKeys,
-            mightContainPartitioned(trainKeys, probes,
-              idCol, keyCol, expectedItemsPerPart, numBitsPerPart, numPartitions)))
-          val n = s.count()
-          survivorsMemo = Some((memoKey, s, n))
-          (s, n)
-      }
-      val verify = trainKeys.select(col(keyCol).cast("string").as(keyCol))
-      val survivorSide =
-        if (nSurvivors <= maxBroadcastSurvivorRows) broadcast(survivors)
-        else survivors
-      verify.join(survivorSide, Seq(keyCol))
-        .select(col(idCol), col(keyCol))
-    }
-
-  /** One-slot (key, survivors, count) memo for [[verifiedHitsBloomPruned]]
-    * — bounded like the registry, cleared with it. */
-  private var survivorsMemo: Option[(Seq[Any], DataFrame, Long)] = None
+                              maxBroadcastSurvivorRows: Long = 1L << 20): DataFrame = {
+    val train = trainKeys.localCheckpoint(true)
+    val survivors = mightContainPartitioned(train, probes,
+      idCol, keyCol, expectedItemsPerPart, numBitsPerPart, numPartitions)
+      .localCheckpoint(true) // counted, then joined
+    val verify = train.select(col(keyCol).cast("string").as(keyCol))
+    val survivorSide =
+      if (survivors.count() <= maxBroadcastSurvivorRows) broadcast(survivors)
+      else survivors
+    verify.join(survivorSide, Seq(keyCol))
+      .select(col(idCol), col(keyCol))
+  }
 }

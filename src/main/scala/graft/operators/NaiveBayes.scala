@@ -134,28 +134,16 @@ object NaiveBayes {
       maxBroadcastModelRows)
   }
 
-  /** The eager half of [[scoreCore]] — everything that depends only on
-    * the model STATE (never on the rows to score): the count-state
-    * checkpoint, the per-class scalars, and (when the state fits the
-    * broadcast guard) the broadcast w → lg-vector map. Split out (r14,
-    * guide §2.6) so a composed pipeline (IngestCapstone) can build the
-    * model on a driver thread CONCURRENTLY with its other rungs'
-    * actions instead of serializing ~6 driver round trips behind them;
-    * [[prepareModel]] + [[scoreWithModel]] compute exactly what the
-    * fused scoreCore did, in the same order. The map is built whenever
-    * the state fits the guard — a non-integral-id caller would waste
-    * that one vocab-bounded collect, but every current caller routes
-    * integral ids (the r11 idIntegral rule decides at apply time). */
-  private[graft] final case class NbModel(
-      counts: DataFrame, srcs: Array[String], lgnvArr: Array[Long],
-      priorArr: Array[Long], v: Long, modelRows: Long, maxModel: Long,
-      bc: Option[org.apache.spark.broadcast.Broadcast[
-        java.util.HashMap[String, Array[Long]]]])
-
-  private[graft] def prepareModel(wordCountsIn: DataFrame,
-                                  docCountsIn: DataFrame,
-                                  maxModel: Long = MaxBroadcastModelRows): NbModel = {
-    val spark = wordCountsIn.sparkSession
+  /** Shared scorer over the model state (src, w, c) + (src, d). Below
+    * the model-size guard, the apply path is the q177 shape — model
+    * broadcast as a map, every document scored row-locally in ONE
+    * corpus pass with zero shuffles; above it, a word-keyed relational
+    * join chain computes the same integers. */
+  private def scoreCore(wordCountsIn: DataFrame, docCountsIn: DataFrame,
+                        toScore: DataFrame, idCol: String, labelCol: String,
+                        textCol: String, maxModel: Long): DataFrame = {
+    val spark = toScore.sparkSession
+    import spark.implicits._
     // three consumers (per-class rollup, size rollup, model build)
     // — materialize the count state once (the q167/q174 lesson)
     val counts = wordCountsIn.localCheckpoint(true)
@@ -187,7 +175,10 @@ object NaiveBayes {
         "state cannot score anything)")
     val lgnvArr = srcs.map(s => ilg(perSrcN(s) + v))
     val priorArr = srcs.map(s => ilg(dBySrc(s)) - ilg(dt))
-    val bc = if (modelRows <= maxModel) {
+    // the w → lg-vector map is built whenever the state fits the guard
+    // (a non-integral-id caller wastes that one vocab-bounded collect;
+    // every current caller routes integral ids)
+    val bcOpt = if (modelRows <= maxModel) {
       val srcIdx = srcs.zipWithIndex.toMap
       val nSrc = srcs.length
       val modelMap = new java.util.HashMap[String, Array[Long]](
@@ -199,26 +190,6 @@ object NaiveBayes {
       }
       Some(spark.sparkContext.broadcast(modelMap))
     } else None
-    NbModel(counts, srcs, lgnvArr, priorArr, v, modelRows, maxModel, bc)
-  }
-
-  /** Shared scorer over the model state (src, w, c) + (src, d). Below
-    * the model-size guard, the apply path is the q177 shape — model
-    * broadcast as a map, every document scored row-locally in ONE
-    * corpus pass with zero shuffles; above it, a word-keyed relational
-    * join chain computes the same integers. */
-  private def scoreCore(wordCountsIn: DataFrame, docCountsIn: DataFrame,
-                        toScore: DataFrame, idCol: String, labelCol: String,
-                        textCol: String, maxModel: Long): DataFrame =
-    scoreWithModel(prepareModel(wordCountsIn, docCountsIn, maxModel),
-      toScore, idCol, labelCol, textCol)
-
-  private[graft] def scoreWithModel(m: NbModel, toScore: DataFrame,
-                                    idCol: String, labelCol: String,
-                                    textCol: String): DataFrame = {
-    val spark = toScore.sparkSession
-    import spark.implicits._
-    val NbModel(counts, srcs, lgnvArr, priorArr, _, modelRows, maxModel, bcOpt) = m
 
     // r11 (ADVICE): the typed fast path scores ids as Long — a
     // non-integral id column would silently null out under the cast and

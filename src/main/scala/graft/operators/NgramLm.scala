@@ -280,21 +280,12 @@ object NgramLm {
         sum(col("oov")).as("n_oov"),
         sum(col("s_e9")).as("sum_s_e9"))
       .withColumn("score_e9", expr("sum_s_e9 div n_ngrams"))
-    // The scored table is the LM family's warehouse artifact — CCNet
-    // materializes per-doc scores once and every downstream pass
-    // (tertile bucketing q165, pruning audits, mixture builds) joins
-    // them rather than re-walking the model. One-slot registry (the
-    // q158/q113 shape): the most recent (train, docs, n, minCount)
-    // plan's rollup stays warm; a different-parameter call swaps it.
-    registry.retainAll(Seq(scored)).head
+    // One consumer per call (q155/q161/q165/q166 each read it once),
+    // so the rollup stays a plain lazy plan. A caller that re-reads the
+    // per-doc scores (CCNet's warehouse artifact shape) materializes
+    // them itself.
+    scored
   }
-
-  private val registry = new CacheRegistry
-  private val knRegistry = new CacheRegistry
-
-  /** Release the retained scored rollup (idempotent; results stay
-    * correct afterwards — lineage recomputes). */
-  def releaseCaches(): Unit = { registry.release(); knRegistry.release() }
 
   /** Interpolated Kneser–Ney bigram scoring (Kneser & Ney 1995; the
     * interpolated form of Chen & Goodman 1999 §2.7) — the smoothing the
@@ -353,18 +344,18 @@ object NgramLm {
                          idCol: String, textCol: String): DataFrame = {
     // The bigram count relation feeds FIVE consumers (ctx, cont, B, Vc,
     // and the scoring join) whose pruned projections canonicalize
-    // differently — without retention each one re-scans and re-explodes
-    // the train corpus (plan-audited r9: 7 parquet scans, 0
-    // ReusedExchange; 1.49 s -> see BASELINE r9). One-slot registry
-    // (NOT the backoff rollup's slot — KN gets its own, so a
-    // q161-family call cannot evict a warm KN model mid-plan), lazy,
-    // vocabulary-bounded.
-    val bi = knRegistry.retainAll(Seq(train
+    // differently, so each re-scans and re-explodes the train corpus
+    // (plan-audited r9: 7 parquet scans, 0 ReusedExchange). Left
+    // unpinned on measurement: at x10 the plain plan ran 4.37 s against
+    // 5.01 s with a localCheckpoint and 3.98-4.07 s with a cross-call
+    // cache, all within heat; the tail is the model-probe joins
+    // (OPTIMIZATION_r13.md, "Kneser–Ney cache variants at x10").
+    val bi = train
       .select(explode(call_function("graft_shingles", col(textCol), lit(2)))
         .as("bg"))
       .groupBy(col("bg")).agg(count(lit(1)).as("c12"))
       .withColumn("w1", split(col("bg"), " ").getItem(0))
-      .withColumn("w2", split(col("bg"), " ").getItem(1)))).head
+      .withColumn("w2", split(col("bg"), " ").getItem(1))
     val ctx = bi.groupBy(col("w1"))
       .agg(sum(col("c12")).as("ctx_v"), count(lit(1)).as("n1p_v"))
     val cont = bi.groupBy(col("w2")).agg(count(lit(1)).as("n1p_w"))

@@ -83,14 +83,11 @@ object RandomProjection {
     require(shortlist >= topK, s"shortlist $shortlist must be >= topK=$topK")
     val sm = signs(seed, query.length, k)
     val qp = projectQuery(query, sm)
-    // The projected corpus is the rung's recomputable probe-side state —
-    // every ANN system amortizes it across probes. One-slot registry
-    // (the NgramLm/q158 shape): repeated probes against one (corpus,
-    // seed, k) reuse the projection; a different corpus/seed swaps it.
-    // Still index-FREE: nothing persists, lineage recomputes anywhere.
-    val projected =
-      registry.retainAll(Seq(project(df, vecCol, "__y", sm))).head
-    val short = projected
+    // The projected corpus has one consumer (the shortlist sort), so it
+    // stays a row-local map over the scan. Index-FREE: nothing persists
+    // between probes; a caller probing one (corpus, seed, k) many times
+    // materializes `project` output itself and ranks against that.
+    val short = project(df, vecCol, "__y", sm)
       .withColumn("__d2",
         aggregate(
           zip_with(col("__y"), typedlit(qp), (a, b) => (a - b) * (a - b)),
@@ -108,9 +105,4 @@ object RandomProjection {
       .limit(topK)
       .drop("sim", vecCol)
   }
-
-  private val registry = new CacheRegistry
-
-  /** Release the retained projected corpus (idempotent). */
-  def releaseCaches(): Unit = registry.release()
 }

@@ -48,10 +48,10 @@ import org.apache.spark.sql.functions._
   *
   * Measured x10 ladder (1.16M token rows, 310-token vocab, 124k result
   * pairs): regroup 6.1 s -> rank-window 5.0 s -> dictionary 4.3 s ->
-  * dictionary + persisted tokenization 3.2 s probe / 2.44 s bench-warm
-  * (vs DuckDB 1.03 s running the same algorithm in ONE in-process
-  * pipeline — the remaining gap is the ~6-job stage floor, each stage
-  * sub-second; growth for 10x data is +74%, strongly sublinear).
+  * dictionary + materialized tokenization 3.2 s probe (vs DuckDB 1.03 s
+  * running the same algorithm in ONE in-process pipeline — the
+  * remaining gap is the ~6-job stage floor, each stage sub-second;
+  * growth for 10x data is +74%, strongly sublinear).
   *
   * Both paths compute the same prefixes up to token-order ties (any
   * consistent total order preserves completeness, and the OUTPUT —
@@ -77,37 +77,22 @@ object SetSimJoin {
   private def ceilDiv(a: Column, b: Column): Column =
     floor((a + b - lit(1)) / b).cast("long")
 
-  /** Tokenized input: (id, blocks..., l, sz) — not yet persisted;
-    * [[retainAll]] owns the cache lifecycle. */
+  /** Tokenized input (id, blocks..., l, sz), pinned for the call: it
+    * feeds THREE consumers over two jobs (df aggregate, prefix
+    * generation, verification), so without the pin the regex
+    * tokenize+distinct pass re-runs per consumer and dominates the wall
+    * clock (measured x10, dict path: 4.3 s -> 3.2 s materialized once).
+    * At sf0.1 the pin beats recomputing (q134 1.35 s vs 1.46 s, q140
+    * 1.02 vs 1.13, Bench warm medians, 4 cores). The pin is
+    * the tokenized corpus itself (spillable) and dies with the call's
+    * frames; nothing is kept for the next call. */
   private def tokenized(df: DataFrame, idCol: String, tokensCol: Column,
                         blocks: Seq[Column]): DataFrame =
     df.select(
         (col(idCol).cast("long").as("id") +: blocks) :+
           array_distinct(tokensCol).as("l"): _*)
       .withColumn("sz", size(col("l")).cast("long"))
-
-  /** One-call cache registry (round 8, replacing r7's eager
-    * localCheckpoint+unpersist — the r7 shape fixed the r6 leak but
-    * destroyed cross-call cache reuse and made the operator eager;
-    * measured at sf0.1 ONLY-mode: q134 1.66-1.72 s eager vs 0.95 s in
-    * the r6 cached artifact). Holds the MOST RECENT call's corpora
-    * only (<= 2 entries — an R-S join's two sides); mechanics and
-    * rationale in [[CacheRegistry]], extracted for the other
-    * twice-consumed-corpus operators (BloomFilters' verify path). */
-  private val registry = new CacheRegistry
-
-  private def retainAll(ts: Seq[DataFrame]): Seq[DataFrame] =
-    registry.retainAll(ts)
-
-  /** Release every corpus cache this operator retained (idempotent).
-    * Results stay correct afterwards — lineage is intact, plans
-    * recompute. */
-  def releaseCache(): Unit = registry.release()
-
-  /** Test observability (the spec must not count the session-global
-    * persistent-RDD set — other suites persist concurrently). */
-  private[operators] def retainedFrames: Seq[DataFrame] =
-    registry.retainedFrames
+      .localCheckpoint(true)
 
   /** Prefix rows (id, blocks..., sz, pos, token) for `t` under the
     * (df asc, token asc) order, regime-split on vocabulary size. `head`
@@ -197,36 +182,15 @@ object SetSimJoin {
     * @param dictMaxTokens vocabulary-size ceiling for the
     *                  dictionary-broadcast prefix path; 0 forces the
     *                  shuffled path (the spec uses this to pin both)
-    * @param cache     CACHE CONTRACT (default true): the tokenized
-    *                  corpus is persisted through the one-call
-    *                  [[retainAll]] registry — it stays cached until
-    *                  the NEXT SetSimJoin call retires it (or
-    *                  [[releaseCache]]), so repeated identical calls
-    *                  re-use the tokenization and at most one call's
-    *                  corpora are ever held. The result itself is LAZY
-    *                  (nothing executes at call time except one small
-    *                  dictionary-head job of <= dictMaxTokens+1 rows).
-    *                  Pass `cache = false` to persist nothing at all —
-    *                  pure plan composition; tokenization recomputes
-    *                  per consuming job.
     * @return (id_a, id_b, n_common, sz_a, sz_b) — all LongType
     */
   def selfJoin(df: DataFrame, idCol: String, tokensCol: Column,
                simNum: Int, simDen: Int,
                blockCols: Seq[String] = Seq.empty,
-               dictMaxTokens: Int = 1 << 20,
-               cache: Boolean = true): DataFrame = {
+               dictMaxTokens: Int = 1 << 20): DataFrame = {
     require(simNum > 0 && simNum <= simDen,
       s"similarity threshold $simNum/$simDen out of (0, 1]")
-    // The tokenized corpus feeds THREE consumers (df aggregate, prefix
-    // generation, verification) — without persistence the regex
-    // tokenize+distinct pass re-runs per job and dominates the wall
-    // clock (measured x10, dict path: 4.3 s -> 3.2 s with the cache).
-    // Memory cost is the tokenized corpus itself (spillable);
-    // materializing the tokenization once is also what a 100 TB
-    // pipeline does.
-    val t0 = tokenized(df, idCol, tokensCol, blockCols.map(col))
-    val t = if (cache) retainAll(Seq(t0)).head else t0
+    val t = tokenized(df, idCol, tokensCol, blockCols.map(col))
 
     // Global df per token — the ordering only needs to be SOME total
     // order shared by all sets, so block-local dfs are unnecessary.
@@ -255,20 +219,16 @@ object SetSimJoin {
     * Same regime split, prunes, and integer verification as
     * [[selfJoin]]; no id constraint — a document present in both inputs
     * pairs with itself, which is exactly what a contamination probe
-    * wants to see. `cache` carries [[selfJoin]]'s cache contract:
-    * default true retains BOTH tokenized sides in the one-call
-    * registry (retired at the next call); false persists nothing. */
+    * wants to see. Both tokenized sides are pinned for the call, as in
+    * [[selfJoin]]. */
   def join(left: DataFrame, right: DataFrame, idCol: String,
            tokensCol: Column, simNum: Int, simDen: Int,
            blockCols: Seq[String] = Seq.empty,
-           dictMaxTokens: Int = 1 << 20,
-           cache: Boolean = true): DataFrame = {
+           dictMaxTokens: Int = 1 << 20): DataFrame = {
     require(simNum > 0 && simNum <= simDen,
       s"similarity threshold $simNum/$simDen out of (0, 1]")
-    val tA0 = tokenized(left, idCol, tokensCol, blockCols.map(col))
-    val tB0 = tokenized(right, idCol, tokensCol, blockCols.map(col))
-    val Seq(tA, tB) =
-      if (cache) retainAll(Seq(tA0, tB0)) else Seq(tA0, tB0)
+    val tA = tokenized(left, idCol, tokensCol, blockCols.map(col))
+    val tB = tokenized(right, idCol, tokensCol, blockCols.map(col))
     val dfreq = tA.select(explode(col("l")).as("token"))
       .unionByName(tB.select(explode(col("l")).as("token")))
       .groupBy(col("token")).agg(count(lit(1)).as("df"))

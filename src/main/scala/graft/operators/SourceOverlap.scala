@@ -42,25 +42,19 @@ import org.apache.spark.sql.functions._
   * pre-cap plan unchanged (q159).
   *
   * The distinct relation is consumed THREE times (both join sides +
-  * the totals), so it is retained for the call via the one-slot
-  * [[CacheRegistry]]: without the cache the x100 smoke measured
-  * exchange reuse breaking at scale — per-row shuffle bytes exactly
-  * doubled (39 -> 78 B/row) as the distinct subtree was recomputed
-  * for the second join side. Alternatives measured and rejected at
+  * the totals), so it is pinned for the call (`localCheckpoint`):
+  * without a pin the x100 smoke measured exchange reuse breaking at
+  * scale — per-row shuffle bytes exactly doubled (39 -> 78 B/row) as
+  * the distinct subtree was recomputed for the second join side — and
+  * at sf0.1 the capped form (q160, whose df window would also re-run)
+  * measured 1.37 s pinned vs 1.58 s recomputed (Bench warm medians, 6
+  * passes, 4 cores). Nothing is kept for the next call. Alternatives measured and rejected at
   * sf0.1 ONLY-mode: raw-string keys 1.53 s (vs 1.51 md5-keyed);
   * collect_set-by-key + row-local pair explode 1.88 s
   * (ObjectHashAggregate leaves whole-stage codegen — costs more than
   * the saved shuffle on a page-cached local box).
   */
 object SourceOverlap {
-
-  private val registry = new CacheRegistry
-
-  /** Release the retained distinct relation (idempotent). */
-  def releaseCache(): Unit = registry.release()
-
-  private[operators] def retainedFrames: Seq[DataFrame] =
-    registry.retainedFrames
 
   /** The overlap matrix over `df`, keyed on md5 of `keyCol` values
     * grouped by `srcCol`. `keyed` rows are (src, k) BEFORE distinct —
@@ -82,7 +76,7 @@ object SourceOverlap {
           org.apache.spark.sql.expressions.Window.partitionBy(col("__k"))))
         .filter(col("__df") <= maxSourcesPerKey)
         .drop("__df")
-    val Seq(sh) = registry.retainAll(Seq(capped))
+    val sh = capped.localCheckpoint(true)
     val counts = sh.groupBy(col("__src")).agg(count(lit(1)).as("n"))
     sh.as("a")
       .join(sh.as("b"),

@@ -64,7 +64,7 @@ object ScalarOpsQueries {
     // __urls/__kept as real columns across Project boundaries (which
     // CollapseProject keeps, because they are referenced repeatedly and
     // are not cheap) evaluates each once: 0.49 -> 0.19 s measured
-    // (DevProbe q96, sf0.1). Same expressions, same values, same hash.
+    // (sf0.1; OPTIMIZATION_r13.md §5). Same expressions, same values, same hash.
     part(s, d).select(
         k.as("part_id"), rule.as("rule"), urls.as("__urls"), col("p_brand"))
       .withColumn("__kept", ColumnOps.layFlatPick(col("__urls"), col("rule")))

@@ -340,8 +340,8 @@ object TrainingQueries {
   // pruning rate varies); the x100 sizing and the amortized byte
   // profile are in BASELINE.md "Round-8: x100 span/contamination
   // dossier". The operator
-  // retains the train-shingle corpus for the call (CacheRegistry) and
-  // broadcast-verifies the pruned survivors — the smoke's measured
+  // pins the train-shingle corpus and the counted survivors for the
+  // call and broadcast-verifies the survivors — the smoke's measured
   // steady-batch shape.
   private def q158(s: SparkSession, d: String): DataFrame = {
     val sh = documents(s, d).select(col("doc_id"),

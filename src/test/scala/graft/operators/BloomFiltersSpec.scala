@@ -103,7 +103,6 @@ class BloomFiltersSpec extends SparkSpec {
         .as[(Long, String)].collect().sorted.toSeq
       assert(pruned === plain, s"sizing ($items, $bits) diverged from plain join")
     }
-    BloomFilters.releaseCache()
   }
 
   test("verifiedHitsBloomPruned verify join broadcasts the survivors side") {
@@ -120,7 +119,6 @@ class BloomFiltersSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"),
       s"verify join must broadcast the survivors side, got:\n$plan")
-    BloomFilters.releaseCache()
   }
 
   test("survivors broadcast is guarded: undersized bitmap + dirty eval " +
@@ -151,7 +149,6 @@ class BloomFiltersSpec extends SparkSpec {
       assert(!plan.contains("BroadcastHashJoin"),
         s"over-threshold survivors must NOT take the hinted broadcast:\n$plan")
       assert(guarded.as[(Long, String)].collect().sorted.toSeq === plain)
-      BloomFilters.releaseCache()
 
       // and the same inputs UNDER the threshold keep the hinted broadcast
       val hinted = BloomFilters.verifiedHitsBloomPruned(train, eval_,
@@ -162,61 +159,7 @@ class BloomFiltersSpec extends SparkSpec {
       assert(hinted.as[(Long, String)].collect().sorted.toSeq === plain)
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      BloomFilters.releaseCache()
     }
-  }
-
-  test("survivors memo: an identical repeated call reuses the counted " +
-      "survivors (one slot, keyed on input plans + sizing)") {
-    BloomFilters.releaseCache()
-    val train = (0 until 300).map(i => s"t$i").toDF("shingle")
-    val eval_ = (1 to 30).map(i => (1L, s"t$i")).toDF("doc_id", "shingle")
-    def call() = BloomFilters.verifiedHitsBloomPruned(train, eval_,
-      "doc_id", "shingle", expectedItemsPerPart = 300L,
-      numBitsPerPart = 4800L, numPartitions = 2)
-    val r1 = call().as[(Long, String)].collect().sorted.toSeq
-    val m1 = BloomFilters.memoSurvivorFrame.get
-    val r2 = call().as[(Long, String)].collect().sorted.toSeq
-    val m2 = BloomFilters.memoSurvivorFrame.get
-    assert(m1 eq m2, "identical call must reuse the memoized survivors frame")
-    assert(r1 === r2)
-    // a DIFFERENT sizing is a different model — memo must be replaced
-    BloomFilters.verifiedHitsBloomPruned(train, eval_, "doc_id", "shingle",
-      expectedItemsPerPart = 150L, numBitsPerPart = 2400L,
-      numPartitions = 2).count()
-    assert(!(BloomFilters.memoSurvivorFrame.get eq m1))
-    BloomFilters.releaseCache()
-    assert(BloomFilters.memoSurvivorFrame.isEmpty)
-  }
-
-  test("cache registry: bounded at one call's corpus, release empties it") {
-    BloomFilters.releaseCache()
-    assert(BloomFilters.retainedFrames.isEmpty)
-    val eval_ = Seq((1L, "a"), (2L, "b")).toDF("doc_id", "shingle")
-    (0 until 3).foreach { i =>
-      val train = (0 until 100).map(j => s"t$i-$j").toDF("shingle")
-      BloomFilters.verifiedHitsBloomPruned(train, eval_, "doc_id", "shingle",
-        expectedItemsPerPart = 100L, numBitsPerPart = 1600L,
-        numPartitions = 2).count()
-      // the guarded verify retains TWO frames per call — the train
-      // corpus and the counted survivors — and no more
-      assert(BloomFilters.retainedFrames.size <= 2,
-        s"call $i retained ${BloomFilters.retainedFrames.size} frames — leak")
-    }
-    // a repeated identical call re-uses the retained frame, not a new one
-    val train = (0 until 100).map(j => s"t$j").toDF("shingle")
-    BloomFilters.contaminationBloomPruned(train, eval_, "doc_id", "shingle",
-      expectedItemsPerPart = 100L, numBitsPerPart = 1600L,
-      numPartitions = 2).count()
-    val f1 = BloomFilters.retainedFrames
-    BloomFilters.contaminationBloomPruned(train, eval_, "doc_id", "shingle",
-      expectedItemsPerPart = 100L, numBitsPerPart = 1600L,
-      numPartitions = 2).count()
-    val f2 = BloomFilters.retainedFrames
-    assert(f1.size === 1 && f2.size === 1)
-    assert(f1.head eq f2.head, "identical call must re-use the retained frame")
-    BloomFilters.releaseCache()
-    assert(BloomFilters.retainedFrames.isEmpty)
   }
 
   test("approxContamination upper-bounds the exact q71-style join") {

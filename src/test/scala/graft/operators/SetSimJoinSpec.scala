@@ -25,46 +25,6 @@ class SetSimJoinSpec extends SparkSpec {
         split(col("text"), "\\s+"), num, den, dictMaxTokens = dictMax)
       .as[(Long, Long, Long, Long, Long)].collect().toSet
 
-  test("cache=false persists nothing, same result") {
-    SetSimJoin.releaseCache()
-    val rows = Seq(1L -> "a b c d", 2L -> "a b c e", 3L -> "x y z",
-      4L -> "x y z")
-    val lazyDf = SetSimJoin.selfJoin(rows.toDF("doc_id", "text"), "doc_id",
-      split(col("text"), "\\s+"), 1, 2, cache = false)
-    assert(SetSimJoin.retainedFrames.isEmpty,
-      "cache=false must not retain anything at call time")
-    val got = lazyDf.as[(Long, Long, Long, Long, Long)].collect().toSet
-    assert(got === brute(rows, 1, 2))
-    assert(SetSimJoin.retainedFrames.isEmpty,
-      "cache=false must not retain a cache entry after execution")
-  }
-
-  test("cache registry is bounded: repeated distinct calls retain only the last call's corpora") {
-    SetSimJoin.releaseCache()
-    // 4 distinct corpora in sequence — the r6 leak shape
-    (1 to 4).foreach { i =>
-      val rows = Seq((1L, s"a$i b$i c$i"), (2L, s"a$i b$i d$i"))
-      SetSimJoin.selfJoin(rows.toDF("doc_id", "text"), "doc_id",
-        split(col("text"), "\\s+"), 1, 2).collect()
-      assert(SetSimJoin.retainedFrames.size <= 1,
-        "the one-call registry must cap at 1 corpus for self-joins")
-    }
-    // repeated IDENTICAL calls keep (not churn) the cache entry
-    val rows = Seq((1L, "p q r"), (2L, "p q s"))
-    val r1 = SetSimJoin.selfJoin(rows.toDF("doc_id", "text"), "doc_id",
-      split(col("text"), "\\s+"), 1, 2).collect().toSet
-    val f1 = SetSimJoin.retainedFrames
-    val r2 = SetSimJoin.selfJoin(rows.toDF("doc_id", "text"), "doc_id",
-      split(col("text"), "\\s+"), 1, 2).collect().toSet
-    val f2 = SetSimJoin.retainedFrames
-    assert(f1.size === 1 && f2.size === 1)
-    assert(f1.head eq f2.head,
-      "an identical repeated call must reuse the retained frame, not churn it")
-    assert(r1 === r2)
-    SetSimJoin.releaseCache()
-    assert(SetSimJoin.retainedFrames.isEmpty)
-  }
-
   test("matches brute force on a crafted corpus (tau = 1/2)") {
     val rows = Seq(
       1L -> "a b c d",

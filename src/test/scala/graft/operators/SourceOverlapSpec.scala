@@ -15,7 +15,6 @@ class SourceOverlapSpec extends SparkSpec {
     val got = SourceOverlap.matrix(keyed, "src", "k")
       .as[(String, String, Long, Long, Long)].collect().toSeq
     assert(got === Seq(("s1", "s2", 2L, 3L, 3L)))
-    SourceOverlap.releaseCache()
   }
 
   test("pairs are ordered (source_a < source_b), zero-overlap pairs absent") {
@@ -24,7 +23,6 @@ class SourceOverlapSpec extends SparkSpec {
       .select(col("source_a"), col("source_b"))
       .as[(String, String)].collect().toSeq
     assert(got === Seq(("a", "z")))
-    SourceOverlap.releaseCache()
   }
 
   test("capped ≡ uncapped when no key's source-df exceeds the cap") {
@@ -36,7 +34,6 @@ class SourceOverlapSpec extends SparkSpec {
     val cap = SourceOverlap.matrix(keyed, "src", "k", maxSourcesPerKey = 2)
       .collect().toSeq
     assert(cap === un)
-    SourceOverlap.releaseCache()
   }
 
   test("df cap boundary: df == cap kept, df == cap+1 dropped; totals follow") {
@@ -52,7 +49,6 @@ class SourceOverlapSpec extends SparkSpec {
     // (n_a/n_b count the capped key universe) — s1:{p12,solo1}=2,
     // s2:{p12,p23}=2, s3:{p23}=1
     assert(got === Seq(("s1", "s2", 1L, 2L, 2L), ("s2", "s3", 1L, 2L, 1L)))
-    SourceOverlap.releaseCache()
   }
 
   test("boilerplate blowup is bounded by the cap (the fan-out guard)") {
@@ -70,24 +66,9 @@ class SourceOverlapSpec extends SparkSpec {
     val keyed = rows.toDF("src", "k")
     val un = SourceOverlap.matrix(keyed, "src", "k")
       .agg(sum(col("n_shared"))).as[Long].head()
-    SourceOverlap.releaseCache()
     val cap = SourceOverlap.matrix(keyed, "src", "k", maxSourcesPerKey = 2)
       .agg(sum(col("n_shared"))).as[Long].head()
-    SourceOverlap.releaseCache()
     assert(un === 5L * (60L * 59L / 2L) + 59L)
     assert(cap === 59L)
-  }
-
-  test("cache registry: bounded at one call's relation, release empties it") {
-    SourceOverlap.releaseCache()
-    assert(SourceOverlap.retainedFrames.isEmpty)
-    (0 until 3).foreach { i =>
-      val keyed = Seq((s"s$i", "a"), ("t", "a")).toDF("src", "k")
-      SourceOverlap.matrix(keyed, "src", "k").count()
-      assert(SourceOverlap.retainedFrames.size <= 1,
-        s"call $i retained ${SourceOverlap.retainedFrames.size} — leak")
-    }
-    SourceOverlap.releaseCache()
-    assert(SourceOverlap.retainedFrames.isEmpty)
   }
 }
