@@ -343,7 +343,8 @@ object Bench {
       val m = measure("x_ingest_state_probe",
         force(graft.etl.IngestCapstone.ingestDecisionsFromState(
           graft.etl.IngestCapstone.readState(spark, "bench_ingest_state"),
-          docs.filter(isBatch),
+          graft.etl.IngestCapstone.pinBatch(docs.filter(isBatch),
+            "doc_id", "lang", "source", "text", "n_chars"),
           "doc_id", "lang", "source", "text", "n_chars")))
       Seq(mBuild, m)
     } catch { case _: Throwable =>
@@ -540,8 +541,9 @@ object Bench {
     // round's compact medians are the third flagging signal. Source:
     // SPARK_GRAFT_PRIOR_BENCH (path to a driver BENCH_r{N}.json
     // envelope or a raw compact line), default = the highest-numbered
-    // BENCH_r*.json in the repo root. Absent/unparsable => no cross-
-    // round flags (first round, foreign box) — never an error.
+    // BENCH_r*.json in the repo root. Absent, unparsable or not an arr
+    // compact line => no cross-round flags (first round, foreign box)
+    // — never an error.
     val (priorMedians: Map[String, Double], priorFloor: Option[Double]) = try {
       val path = sys.env.get("SPARK_GRAFT_PRIOR_BENCH").orElse {
         val repo = new java.io.File("/root/repo")
@@ -564,67 +566,53 @@ object Bench {
           val root = JsonMethods.parse(txt)
           val parsed =
             if ((root \ "parsed") != JNothing) root \ "parsed" else root
-          val qs = (parsed \ "queries") match {
-            case o: JObject => o
-            case _ => JObject()
-          }
-          // a prior artifact written at the base-36 degradation level
-          // declares "kf":"b36" — decode its keys back to decimal
-          val kf = (parsed \ "kf") match {
-            case JString(s) => Some(s)
-            case _ => None
-          }
-          def key(k: String) = HealPolicy.canonKey(HealPolicy.decodeKey(k, kf))
-          val vf = (parsed \ "vf") match {
-            case JString(s) => Some(s)
-            case _ => None
-          }
-          def med(v: Double) = HealPolicy.decodeMedian(v, vf)
+          // only the arr compact line ("kf":"arr") is read; any other
+          // artifact reads as no priors. Medians ride a positional
+          // array ordered by the "qn" range spec; the non-numeric keys
+          // ride "qx"
+          require((parsed \ "kf") == JString("arr"),
+            s"$p: not an arr compact line")
           def num(j: JValue): Option[Double] = j match {
             case JDouble(v) => Some(v)
             case JInt(v) => Some(v.toDouble)
             case JDecimal(v) => Some(v.toDouble)
             case _ => None
           }
-          // r14 "arr" rung: medians ride a positional array ordered by
-          // the "qn" range spec; the non-numeric keys ride "qx"
-          val meds: Map[String, Double] =
-            if (kf.contains("arr")) {
-              val qn = (parsed \ "qn") match {
-                case JString(s) => s
-                case _ => ""
+          val vf = (parsed \ "vf") match {
+            case JString(s) => Some(s)
+            case _ => None
+          }
+          def med(v: Double) = HealPolicy.decodeMedian(v, vf)
+          val qn = (parsed \ "qn") match {
+            case JString(s) => s
+            case _ => ""
+          }
+          // positional decode is alignment-critical (r12, ADVICE):
+          // a single non-numeric entry or a qn/array length
+          // mismatch would silently shift every later median onto
+          // the wrong query key — treat either as a parse failure
+          // and degrade to NO numeric priors instead.
+          val valsOpt: Option[List[Double]] = (parsed \ "queries") match {
+            case JArray(vs) =>
+              val each = vs.map(num)
+              if (each.forall(_.isDefined)) Some(each.flatten) else None
+            case _ => None
+          }
+          val names = HealPolicy.decodeRanges(qn)
+          val numeric = valsOpt match {
+            case Some(vals) if names.length == vals.length =>
+              names.zip(vals).map {
+                case (n, v) => HealPolicy.canonKey(n.toString) -> med(v)
               }
-              // positional decode is alignment-critical (r12, ADVICE):
-              // a single non-numeric entry or a qn/array length
-              // mismatch would silently shift every later median onto
-              // the wrong query key — treat either as a parse failure
-              // and degrade to NO numeric priors instead.
-              val valsOpt: Option[List[Double]] = (parsed \ "queries") match {
-                case JArray(vs) =>
-                  val each = vs.map(num)
-                  if (each.forall(_.isDefined)) Some(each.flatten) else None
-                case _ => None
-              }
-              val names = HealPolicy.decodeRanges(qn)
-              val numeric = valsOpt match {
-                case Some(vals) if names.length == vals.length =>
-                  names.zip(vals).map {
-                    case (n, v) => HealPolicy.canonKey(n.toString) -> med(v)
-                  }
-                case _ => List.empty[(String, Double)]
-              }
-              val extras = (parsed \ "qx") match {
-                case o: JObject => o.obj.flatMap { case (k, j) =>
-                  num(j).map(v => HealPolicy.canonKey(k) -> med(v))
-                }
-                case _ => List.empty[(String, Double)]
-              }
-              (numeric ++ extras).toMap
-            } else qs.obj.collect {
-              case (k, JDouble(v)) => key(k) -> med(v)
-              case (k, JInt(v)) => key(k) -> med(v.toDouble)
-              case (k, JDecimal(v)) => key(k) -> med(v.toDouble)
-            }.toMap
+            case _ => List.empty[(String, Double)]
+          }
+          val extras = (parsed \ "qx") match {
+            case o: JObject => o.obj.flatMap { case (k, j) =>
+              num(j).map(v => HealPolicy.canonKey(k) -> med(v))
+            }
+            case _ => List.empty[(String, Double)]
+          }
+          val meds = (numeric ++ extras).toMap
           val pf = (parsed \ "floor") match {
             case JDouble(v) => Some(v)
             case JInt(v) => Some(v.toDouble)
@@ -725,8 +713,8 @@ object Bench {
     // round 4's compact line still overflowed at 109 base + 30 x10 + 10
     // extra entries with full query names and 9-decimal doubles (~5 KB).
     // Fix (VERDICT r4 item 1): the FINAL printed line carries the BASE
-    // suite only, keyed by the short "qNN" prefix, at 3 decimals —
-    // ~109 × 13 chars ≈ 1.4 KB, guaranteed to survive the tail whole.
+    // suite only, in the compact form below, guaranteed to survive the
+    // tail whole.
     // Everything else (telemetry maps, x10/x_ann/x_json lines with full
     // names) prints on EARLIER lines; nothing should SUM across lines.
     println(s"""{"metric":"total","value":$total,"unit":"sec","floor":$floor,"floor_post":$floorPost,"floor_r":$floorRJson,"rerun":$reruns,"regr":$regrMap,"samples":$samples,"gc_sec":$gcs,"at_sec":$ats,"queries":$qs,"sf":"$sfDir"}""")
@@ -745,80 +733,23 @@ object Bench {
     val mediumLine = s"""{"metric":"total","value":$total,"unit":"sec","floor":$floor,"floor_post":$floorPost,"floor_r":$floorRJson,"rerun":$reruns,"regr":$regrMap,"queries":$qs3,"sf":"$sfDir"}"""
     println(mediumLine)
     println(mediumLine)
-    // 2 decimals: at 147 base queries the 3-decimal line crossed the
-    // 1900-char tail budget (the require below fired in round 6 —
-    // exactly its job). 10 ms resolution is fine for the compact gate
-    // line; full-precision medians stay on the telemetry lines above.
-    // r7: the leading 'q' drops from qNN keys too (151 queries +
-    // x132/x133 + "suspect" reached 1870/1900) — keys are the bare
-    // number ("05", "152"); the x-prefixed extras keep their prefix.
-    // Degradation ladder (r8, VERDICT item 6 — decided BEFORE the
-    // guard fires): 1) decimal keys + suspect list; 2) drop the
-    // suspect list; 3) base-36 keys ("134"->"3q", marked "kf":"b36" so
-    // the cross-round prior-median loader can decode — ~1 char per
-    // 3-digit key, ~2 per future 4-digit key). The require bar stays.
-    def renderQs(keyOf: String => String, vf: Option[String]): String = healedBase
-      .map { m =>
-        val v = vf match {
-          // centisecond ints ("vf":"cs") — 2 chars shorter than "0.12"
-          // per entry; the prior-median loader scales back by 0.01
-          case Some("cs") => math.round(m.median * 100).toString
-          case _ => f"${m.median}%.2f"
-        }
-        "\"" + keyOf(HealPolicy.shortName(m.name)) + "\":" + v
-      }
-      .mkString("{", ",", "}")
-    def renderFinal(susp: String, regr: String, kfMode: Option[String],
-                    vfMode: Option[String] = None,
-                    dropPost: Boolean = false): String = {
-      val kf = kfMode.map(m => s""""kf":"$m",""").getOrElse("")
-      val vf = vfMode.map(m => s""""vf":"$m",""").getOrElse("")
-      val keyOf: String => String = kfMode match {
-        case Some("b36") => HealPolicy.b36Key
-        case Some("b36x") => k => HealPolicy.b36Key(HealPolicy.xShortKey(k))
-        case Some("b36xt") => k =>
-          HealPolicy.b36Key(HealPolicy.trainShortKey(HealPolicy.xShortKey(k)))
-        case _ => identity
-      }
-      val qs2 = renderQs(keyOf, vfMode)
-      val post = if (dropPost) "" else f""""floor_post":$floorPost%.3f,"""
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","floor":$floor%.3f,$post%s"floor_r":$floorRJson%s,$kf%s$vf%s"suspect":$susp%s,"regr":$regr%s,"regr_n":$regrN%d,"queries":$qs2%s,"sf":"$sfDir"}"""
-    }
-    // r14 "arr" rung (VERDICT r10 #1 — the standing format from here):
+    // The compact line (r14 "arr" format, the one printed since r11):
     // numeric base keys leave the line entirely — the key SET encodes
-    // once as a range spec ("qn":"1-81,83-203") and the cs-int medians
-    // ride a positional array in ascending-key order; the two
-    // non-numeric train keys ride the tiny "qx" object at their
-    // b36xt short forms. Measured at the 204-entry r10 surface:
-    // 1889 -> ~1010 chars, ~890 of headroom (~4+ chars/entry means
-    // ~100 more queries before the next rung is needed).
-    def renderFinalArr(susp: String, regr: String): Option[String] = {
-      val keyed = healedBase.map { m =>
-        (HealPolicy.shortName(m.name), math.round(m.median * 100))
-      }
-      HealPolicy.arrPayload(keyed).map { case (qn, qv, qx) =>
-        f"""{"metric":"total","value":$total%.3f,"unit":"sec","floor":$floor%.3f,"floor_post":$floorPost%.3f,"floor_r":$floorRJson%s,"kf":"arr","vf":"cs","suspect":$susp%s,"regr":$regr%s,"regr_n":$regrN%d,"qn":"$qn%s","queries":$qv%s,"qx":$qx%s,"sf":"$sfDir"}"""
-      }
-    }
-    // degradation ladder, re-prioritized r11 (VERDICT r10 #1): the
-    // suspect/regr lists are the artifact's regression evidence, so
-    // EVERY with-lists rung is tried before ANY listless one —
-    // readable decimal keys when the surface is small, then the arr
-    // rung (which dominates all the key-compression rungs it
-    // replaces), with the legacy b36x/b36xt rungs kept only as
-    // fallbacks for a hypothetical non-numeric-keyed surface where
-    // the arr rung declines. The telemetry line always keeps the full
-    // regr evidence map regardless.
-    val finalLine = (Seq(
-      Some(renderFinal(suspectJson, regrJson, None)),
-      renderFinalArr(suspectJson, regrJson),
-      Some(renderFinal(suspectJson, regrJson, Some("b36x"), Some("cs"))),
-      Some(renderFinal("[]", "[]", Some("b36xt"), Some("cs"),
-        dropPost = true)),
-      renderFinalArr("[]", "[]")).flatten)
-      .find(_.length < 1900)
-      .getOrElse(renderFinal("[]", "[]", Some("b36xt"), Some("cs"),
-        dropPost = true))
+    // once as a range spec ("qn":"1-81,83-203") and the centisecond
+    // medians ("vf":"cs") ride a positional array in ascending-key
+    // order; the two non-numeric train keys ride the tiny "qx" object
+    // at their trainShortKey forms. ~4 chars per entry: at 211 queries
+    // the line is ~1.1 KB. If the with-lists line overflows the
+    // 1900-char tail budget, the suspect/regr lists drop (the telemetry
+    // line always keeps the full regr evidence map); if that still
+    // overflows, shrink the format — never raise the limit.
+    val (qn, qv, qx) = HealPolicy.arrPayload(healedBase.map { m =>
+      (HealPolicy.shortName(m.name), math.round(m.median * 100))
+    }).getOrElse(sys.error("duplicate numeric compact-line key"))
+    def arrLine(susp: String, regr: String): String =
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","floor":$floor%.3f,"floor_post":$floorPost%.3f,"floor_r":$floorRJson%s,"kf":"arr","vf":"cs","suspect":$susp%s,"regr":$regr%s,"regr_n":$regrN%d,"qn":"$qn%s","queries":$qv%s,"qx":$qx%s,"sf":"$sfDir"}"""
+    val finalLine = Seq(arrLine(suspectJson, regrJson), arrLine("[]", "[]"))
+      .find(_.length < 1900).getOrElse(arrLine("[]", "[]"))
     require(finalLine.length < 1900,
       s"final bench line ${finalLine.length} chars >= 1900 — would be tail-truncated")
     println(finalLine)

@@ -132,63 +132,27 @@ object HealPolicy {
   def shortName(n: String): String =
     if (n.startsWith("q")) n.takeWhile(_ != '_').drop(1) else n
 
-  /** Base-36 form of a bare-number compact key ("134" -> "3q") — the
-    * next compression level when the compact line outgrows its budget
-    * (the line then carries `"kf":"b36"`). Non-numeric keys (the
-    * x-prefixed extras) pass through unchanged. */
-  def b36Key(k: String): String =
-    if (k.nonEmpty && k.forall(_.isDigit))
-      java.lang.Long.toString(k.toLong, 36)
-    else k
-
-  /** x10 scaled-line key compression ("x10_q167_segment_dedup" ->
-    * "x10_167") — the rung AFTER b36 (r10: ~40 x10 lines at full names
-    * were the dominant term once the base keys were already folded; the
-    * line carries `"kf":"b36x"`). Only x10_qNNN keys fold; the few
-    * x_ann/x_asof extras stay as-is. */
-  private val X10Name = "^x10_q(\\d+)_.*$".r
-
-  def xShortKey(k: String): String = k match {
-    case X10Name(num) => s"x10_$num"
-    case _ => k
-  }
-
-  /** The two ANN train-line keys, folded for the LAST compact rung
-    * ("kf":"b36xt", r13 — the with-lists b36x+cs line reached
-    * 1888/1900 at 199 base queries). The short forms keep an
-    * underscore ON PURPOSE: an all-[0-9a-z] key like "xpt" would be
-    * b36-parsed by [[decodeKey]]; '_' fails its charset test, so the
-    * fold is decode-safe. [[canonKey]] folds BOTH generations. */
+  /** The two ANN train-line keys at their compact-line short forms
+    * (the arr line's "qx" object). [[canonKey]] folds both the full
+    * and the short name, so either meets a prior artifact's key. */
   def trainShortKey(k: String): String = k match {
     case "x132_pq_train" => "x_pt"
     case "x133_ivfpq_train" => "x_it"
     case _ => k
   }
 
-  /** Decode a compact-artifact key back to the decimal form, given the
-    * artifact's declared key format ("b36"/"b36x" or absent/decimal) —
-    * lets the cross-round prior-median lookup read any generation.
-    * (x10_NNN stays short — [[canonKey]] folds BOTH generations to
-    * that form, so matching never needs the full name back.) */
-  def decodeKey(k: String, keyFormat: Option[String]): String =
-    if (keyFormat.exists(_.startsWith("b36")) &&
-        k.nonEmpty && k.forall(c => c.isDigit || (c >= 'a' && c <= 'z')))
-      java.lang.Long.parseLong(k, 36).toString
-    else k
-
   /** Canonical match key for cross-round lookups: numeric keys lose
-    * their zero padding ("05" and the b36 round-trip "5" must meet),
-    * x10 lines fold to their short form from EITHER generation
-    * ("x10_q167_segment_dedup" and "x10_167" must meet), everything
-    * else passes through. */
+    * their zero padding ("05" and the arr range spec's "5" must meet),
+    * the train keys fold to their short form, everything else passes
+    * through. */
   def canonKey(k: String): String =
     if (k.nonEmpty && k.forall(_.isDigit)) k.toLong.toString
-    else trainShortKey(xShortKey(k))
+    else trainShortKey(k)
 
   /** Decode a compact-artifact median back to seconds, given the
-    * artifact's declared value format — "cs" (r9 rung: centisecond
-    * INTEGERS, ~2 chars shorter per entry) or absent/seconds. The
-    * encode side is `round(median·100)` in Bench.renderQs; 10 ms
+    * artifact's declared value format — "cs" (centisecond INTEGERS,
+    * what the arr line carries) or absent/seconds. The encode side is
+    * `round(median·100)` in Bench's compact line; 10 ms
     * resolution is well inside the 1.4× regression-probe bar. */
   def decodeMedian(v: Double, valueFormat: Option[String]): Double =
     valueFormat match {
@@ -196,8 +160,8 @@ object HealPolicy {
       case _ => v
     }
 
-  /** r14 rung ("kf":"arr", VERDICT r10 #1): per-entry KEYS leave the
-    * compact line entirely. The numeric base keys are consecutive
+  /** The compact line's format ("kf":"arr", r14, VERDICT r10 #1):
+    * per-entry KEYS leave the line entirely. The numeric base keys are consecutive
     * query numbers with rare gaps (q82), so the whole key set encodes
     * ONCE as a range spec ("qn":"1-81,83-203", ~12 chars) and the
     * medians ride a positional array in ascending-key order — saving
@@ -231,14 +195,14 @@ object HealPolicy {
       }
     }
 
-  /** The arr rung's three payload fields from (shortKey, centisecond)
+  /** The arr line's three payload fields from (shortKey, centisecond)
     * pairs: the range spec, the positional value array (ascending-key
     * order), and the non-numeric side object (keys at their
     * [[trainShortKey]] forms). None when two numeric keys collide —
     * a positional zip would silently desync (never happens: base
-    * query names are unique qNN_*, but the rung declines rather than
-    * corrupt). Pure so the spec can pin the line budget against the
-    * real encode path. */
+    * query names are unique qNN_*, but Bench then fails rather than
+    * print a corrupt line). Pure so the spec can pin the line budget
+    * against the real encode path. */
   def arrPayload(keyed: Seq[(String, Long)]): Option[(String, String, String)] = {
     // strictly-ASCII, non-empty, toLong-safe keys only (r12, ADVICE):
     // "".forall(_.isDigit) is TRUE, and isDigit admits non-ASCII

@@ -3,7 +3,6 @@ package graft.etl
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.GraftSession
 import graft.operators.{Dedup, DriftMonitor, NaiveBayes, SegmentDedup}
 
 /** The incremental-pipeline capstone (r12, VERDICT r11 #1): one batch
@@ -61,12 +60,14 @@ import graft.operators.{Dedup, DriftMonitor, NaiveBayes, SegmentDedup}
   * ([[graft.streaming.StreamingIngest]]), where each batch pays only
   * batch-proportional work plus bounded state probes.
   *
-  * Scale shape: the batch is pinned once (`localCheckpoint`) and
-  * every rung touches warehouse state the way its proven incremental
-  * form does — segment hashes, LSH bands, count/histogram state are
-  * all bounded or banded, never all-pairs; the NB gate scores only
-  * survivors (candidate restriction before the heavy kernel, the
-  * q196 lesson); the re-plan collects one bounded row per SOURCE.
+  * Scale shape: callers pass a pinned batch ([[pinBatch]], the one
+  * materialization of its rows), the ladder runs its rungs one after
+  * another on the driver, and every rung touches warehouse state the
+  * way its proven incremental form does — segment hashes, LSH bands,
+  * count/histogram state are all bounded or banded, never all-pairs;
+  * the NB gate scores only survivors (candidate restriction before the
+  * heavy kernel, the q196 lesson); the re-plan collects one bounded
+  * row per SOURCE.
   */
 object IngestCapstone {
 
@@ -221,7 +222,7 @@ object IngestCapstone {
     * chars/bytes/tokens; doubles as the PSI feature). `benchmark` is
     * the decontamination reference (typically a held-out slice of the
     * warehouse). */
-  def ingestDecisions(warehouse: DataFrame, batch0: DataFrame,
+  def ingestDecisions(warehouse: DataFrame, batch: DataFrame,
                       benchmark: DataFrame, idCol: String, labelCol: String,
                       sourceCol: String, textCol: String, weightCol: String,
                       numShards: Int = 4, maxMoves: Int = 2,
@@ -231,13 +232,29 @@ object IngestCapstone {
     ingestDecisionsFromState(
       ingestState(warehouse, benchmark, idCol, labelCol, sourceCol,
         textCol, weightCol, numShards, psiBinWidth),
-      batch0, idCol, labelCol, sourceCol, textCol, weightCol,
+      pinBatch(batch, idCol, labelCol, sourceCol, textCol, weightCol),
+      idCol, labelCol, sourceCol, textCol, weightCol,
       numShards, maxMoves, psiBinWidth, psiAlertE9, lshThreshold)
+
+  /** The ladder's five batch columns, materialized once
+    * (`localCheckpoint`) — the form [[ingestDecisionsFromState]]
+    * expects, since every rung reads the batch. */
+  def pinBatch(batch: DataFrame, idCol: String, labelCol: String,
+               sourceCol: String, textCol: String,
+               weightCol: String): DataFrame =
+    batch.select(col(idCol), col(labelCol), col(sourceCol), col(textCol),
+      col(weightCol)).localCheckpoint(true)
 
   /** [[ingestDecisions]] off persisted [[IngestState]] relations —
     * identical decision table (spec-pinned), batch-proportional work:
     * the batch is lined/hashed/signed/shingled/tokenized once each;
-    * warehouse contact is the member rungs' own bounded probes. */
+    * warehouse contact is the member rungs' own bounded probes.
+    *
+    * Callers pass a pinned batch ([[pinBatch]]): every rung reads it,
+    * and the ladder does not pin it again — a caller that also mines
+    * the batch afterwards (the streaming sink's state deltas) reuses
+    * the same materialization. An unpinned batch gives the same
+    * decisions, recomputed per rung. */
   def ingestDecisionsFromState(state: IngestState, batch0: DataFrame,
                                idCol: String, labelCol: String,
                                sourceCol: String, textCol: String,
@@ -247,42 +264,9 @@ object IngestCapstone {
                                psiAlertE9: Long = 100000000L,
                                lshThreshold: Double = 0.3): DataFrame = {
     graft.plans.GraftExtensions.ensure(batch0.sparkSession)
-    // every rung reads the batch — pin it once (multi-consumer rule)
-    val batch = batch0
-      .select(col(idCol), col(labelCol), col(sourceCol), col(textCol),
-        col(weightCol))
-      .localCheckpoint(true)
-
-    // Overlap the independent driver actions (r14, guide §2.6 — actions
-    // are only sequential because the driver calls them sequentially).
-    // Two legs are independent of the pre-verdict ladder and used to
-    // run strictly AFTER its checkpoint:
-    //  - the WAREHOUSE side of the NB count state (the model's one
-    //    corpus-proportional input — the survivors' own counts must
-    //    wait for `pre`, but the warehouse counts never depend on it);
-    //    materializing it here makes classifyIncremental's later merge
-    //    checkpoint a cheap vocab-bounded union instead of the full
-    //    warehouse tokenize (a localCheckpoint is semantically
-    //    transparent — same counts, same merge);
-    //  - the PSI gate scalar (refBins + batch bins — batch-only).
-    // Both launch on driver side threads whose single-task stages
-    // back-fill the cores the pre-DAG's own single-task stages leave
-    // idle, and both are awaited INSIDE this call — nothing leaks past
-    // it, values and plans are identical to the sequential form.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    val (pre, nb, psiE9) = try {
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val whWordCountsF = scala.concurrent.Future {
-      state.nbWordCounts.localCheckpoint(true)
-    }
-    val psiF = scala.concurrent.Future {
-      DriftMonitor
-        .psiFromBinCounts(state.refBins,
-          DriftMonitor.binCounts(batch, weightCol, psiBinWidth))
-        .agg(coalesce(sum(col("psi_term_e9")), lit(0L)))
-        .head().getLong(0)
-    }
+    // pinned by the caller (see the scaladoc)
+    val batch = batch0.select(col(idCol), col(labelCol), col(sourceCol),
+      col(textCol), col(weightCol))
 
     // 1. segment evidence: batch lines dead when in the warehouse
     //    segment state or repeated earlier in the batch (q171's rule)
@@ -369,26 +353,21 @@ object IngestCapstone {
       .localCheckpoint(true)
 
     // 5. NB gate over SURVIVORS only — warehouse count state merged
-    //    with the survivors' own counts (drops feed priors). The
-    //    warehouse counts were materialized concurrently above; the
-    //    merge + scalars here touch vocab-bounded rows + batch tokens.
+    //    with the survivors' own counts (drops feed priors); the merge
+    //    is pinned once inside the scorer
     val survivors = batch.join(
       pre.filter(col("__pre").isNull).select(col(idCol)),
       Seq(idCol), "left_semi")
-    val nb = NaiveBayes.classifyIncremental(
-        scala.concurrent.Await.result(whWordCountsF, GraftSession.driverWait),
-        state.nbDocCounts,
-        survivors, idCol, labelCol, textCol)
+    val nb = NaiveBayes.classifyIncremental(state.nbWordCounts,
+        state.nbDocCounts, survivors, idCol, labelCol, textCol)
       .select(col(idCol), col("predicted"), col("margin_e16"))
 
-    // 6. PSI gate — one bounded driver scalar (q203's exact algebra),
-    //    computed by the concurrent leg above
-    (pre,
-      nb,
-      scala.concurrent.Await.result(psiF, GraftSession.driverWait))
-    // shutdown lets in-flight side jobs finish; a main-thread failure
-    // must not interrupt a Spark job mid-stage, only stop the threads
-    } finally pool.shutdown()
+    // 6. PSI gate — one bounded driver scalar (q203's exact algebra)
+    val psiE9 = DriftMonitor
+      .psiFromBinCounts(state.refBins,
+        DriftMonitor.binCounts(batch, weightCol, psiBinWidth))
+      .agg(coalesce(sum(col("psi_term_e9")), lit(0L)))
+      .head().getLong(0)
 
     val decided = pre.join(nb, Seq(idCol), "left")
       .withColumn("verdict", coalesce(col("__pre"),

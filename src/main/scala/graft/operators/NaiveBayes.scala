@@ -175,22 +175,6 @@ object NaiveBayes {
         "state cannot score anything)")
     val lgnvArr = srcs.map(s => ilg(perSrcN(s) + v))
     val priorArr = srcs.map(s => ilg(dBySrc(s)) - ilg(dt))
-    // the w → lg-vector map is built whenever the state fits the guard
-    // (a non-integral-id caller wastes that one vocab-bounded collect;
-    // every current caller routes integral ids)
-    val bcOpt = if (modelRows <= maxModel) {
-      val srcIdx = srcs.zipWithIndex.toMap
-      val nSrc = srcs.length
-      val modelMap = new java.util.HashMap[String, Array[Long]](
-        math.max(16, (modelRows / 2).toInt))
-      counts.select(col("src"), col("w"), col("c")).collect().foreach { r =>
-        val arr = modelMap.computeIfAbsent(r.getString(1),
-          _ => new Array[Long](nSrc))
-        arr(srcIdx(r.getString(0))) = ilg(r.getLong(2) + 1L)
-      }
-      Some(spark.sparkContext.broadcast(modelMap))
-    } else None
-
     // r11 (ADVICE): the typed fast path scores ids as Long — a
     // non-integral id column would silently null out under the cast and
     // diverge from the fallback (which carries ids untouched). Integral
@@ -214,7 +198,16 @@ object NaiveBayes {
       // pass, ZERO scoring shuffles (the q177 broadcast-vocab apply
       // shape). Long arithmetic end to end — exact through ~2·10¹²
       // tokens per DOCUMENT (lg ≤ 63·2¹⁶), the q183 regime convention.
-      val bc = bcOpt.get
+      val srcIdx = srcs.zipWithIndex.toMap
+      val nSrc = srcs.length
+      val modelMap = new java.util.HashMap[String, Array[Long]](
+        math.max(16, (modelRows / 2).toInt))
+      counts.select(col("src"), col("w"), col("c")).collect().foreach { r =>
+        val arr = modelMap.computeIfAbsent(r.getString(1),
+          _ => new Array[Long](nSrc))
+        arr(srcIdx(r.getString(0))) = ilg(r.getLong(2) + 1L)
+      }
+      val bc = spark.sparkContext.broadcast(modelMap)
       val bcLgnv = lgnvArr; val bcPrior = priorArr; val bcSrcs = srcs
       toScore
         .select(col(idCol).cast("long"), col(labelCol).cast("string"),

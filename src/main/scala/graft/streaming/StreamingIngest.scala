@@ -178,11 +178,9 @@ object StreamingIngest {
       existingPlan = spark.read
         .parquet(s"$warehouseDir/plan/batch=$lastPlan")
         .select(col(sourceCol), col("weight"), col("shard")))
-    // decided AND mined for state deltas — pin once
-    val batch = batchDf
-      .select(col(idCol), col(labelCol), col(sourceCol), col(textCol),
-        col(weightCol))
-      .localCheckpoint(true)
+    // decided AND mined for state deltas — the batch's one pin
+    val batch = IngestCapstone.pinBatch(batchDf, idCol, labelCol,
+      sourceCol, textCol, weightCol)
     val decisions = IngestCapstone.ingestDecisionsFromState(state, batch,
         idCol, labelCol, sourceCol, textCol, weightCol,
         numShards, maxMoves, psiBinWidth, psiAlertE9, lshThreshold)

@@ -89,34 +89,19 @@ class HealPolicySpec extends AnyFunSuite {
     assert(HealPolicy.shortName("x132_pq_train") == "x132_pq_train")
     assert(HealPolicy.shortName("x10_ann_ivf256_index_build") ==
       "x10_ann_ivf256_index_build")
-  }
-
-  test("base-36 degradation keys round-trip through decodeKey") {
-    assert(HealPolicy.b36Key("134") == "3q")
-    assert(HealPolicy.b36Key("05") == "5")
-    assert(HealPolicy.b36Key("153") == "49") // all-digit b36 is legal
-    assert(HealPolicy.b36Key("x132_pq_train") == "x132_pq_train")
-    for (k <- Seq("01", "05", "82", "134", "153", "999")) {
-      assert(HealPolicy.decodeKey(HealPolicy.b36Key(k), Some("b36")) ==
-        k.toLong.toString, k)
-    }
-    // decimal artifacts (no kf) pass through untouched
-    assert(HealPolicy.decodeKey("134", None) == "134")
-    assert(HealPolicy.decodeKey("x132_pq_train", Some("b36")) ==
-      "x132_pq_train")
     // canonical match keys: zero padding never breaks a prior lookup
     assert(HealPolicy.canonKey("05") == "5")
-    assert(HealPolicy.canonKey(
-      HealPolicy.decodeKey(HealPolicy.b36Key("05"), Some("b36"))) ==
-      HealPolicy.canonKey("05"))
-    // r13: the train keys canonicalize to their b36xt short form from
-    // EITHER generation (prior full-name artifacts still match)
+    // the train keys fold to their qx short form from either name
+    assert(HealPolicy.trainShortKey("x132_pq_train") == "x_pt")
+    assert(HealPolicy.trainShortKey("x133_ivfpq_train") == "x_it")
+    assert(HealPolicy.trainShortKey("x_ann_pq_index_build") ==
+      "x_ann_pq_index_build")
     assert(HealPolicy.canonKey("x132_pq_train") == "x_pt")
     assert(HealPolicy.canonKey("x_pt") == "x_pt")
   }
 
   test("cs rung medians round-trip through decodeMedian (r9)") {
-    // encode side is round(median*100) in Bench.renderQs
+    // encode side is round(median*100) in Bench's compact line
     for (m <- Seq(0.12, 1.005, 2.74, 15.3, 0.0)) {
       val enc = math.round(m * 100).toDouble
       val dec = HealPolicy.decodeMedian(enc, Some("cs"))
@@ -128,37 +113,6 @@ class HealPolicySpec extends AnyFunSuite {
     // any line at/above the job floor (~0.10 s): worst-case relative
     // error at the floor is 0.005/0.10 = 5%
     assert(HealPolicy.decodeMedian(10.0, Some("cs")) == 0.1)
-  }
-
-  test("b36x rung folds x10 keys and both generations meet at canonKey (r10)") {
-    assert(HealPolicy.xShortKey("x10_q167_segment_dedup") == "x10_167")
-    assert(HealPolicy.xShortKey("x10_q05_group_summary") == "x10_05")
-    // only x10_qNNN folds — the ann/asof extras and base keys pass through
-    for (k <- Seq("x_ann_pq_index_build", "x132_pq_train", "134", "05",
-        "x10_ann_ivf256_index_build"))
-      assert(HealPolicy.xShortKey(k) == k, k)
-    // cross-generation matching: a prior artifact's full x10 name and a
-    // b36x artifact's short key canonicalize identically
-    assert(HealPolicy.canonKey("x10_q167_segment_dedup") ==
-      HealPolicy.canonKey(HealPolicy.decodeKey("x10_167", Some("b36x"))))
-  }
-
-  test("b36xt rung folds the train keys decode-safely (r13)") {
-    // the short forms keep an underscore ON PURPOSE: all-[0-9a-z]
-    // keys would be b36-parsed by decodeKey ("xpt" IS a valid base-36
-    // number) — '_' fails the charset test
-    assert(HealPolicy.trainShortKey("x132_pq_train") == "x_pt")
-    assert(HealPolicy.trainShortKey("x133_ivfpq_train") == "x_it")
-    assert(HealPolicy.trainShortKey("x_ann_pq_index_build") ==
-      "x_ann_pq_index_build")
-    assert(HealPolicy.decodeKey("x_pt", Some("b36xt")) == "x_pt")
-    // cross-generation: a prior full-name artifact and a b36xt
-    // artifact's short key canonicalize identically
-    assert(HealPolicy.canonKey("x133_ivfpq_train") ==
-      HealPolicy.canonKey(HealPolicy.decodeKey("x_it", Some("b36xt"))))
-    // b36x still decodes the base numeric keys like b36 did
-    assert(HealPolicy.decodeKey("3q", Some("b36x")) == "134")
-    assert(HealPolicy.decodeKey("3q", Some("b36")) == "134")
   }
 
   test("r8 whole-suite-hot shape: per-line probes fire and CONFIRM, " +

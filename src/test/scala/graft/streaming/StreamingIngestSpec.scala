@@ -15,11 +15,20 @@ import graft.operators.DriftMonitor
   * member gate against the FIXED bootstrap reference; its routes must
   * equal the movement-budgeted re-plan chain. Plus the r11
   * replay-idempotence contract: re-running the last micro-batch
-  * leaves decisions AND additive state untouched. */
+  * leaves decisions AND additive state untouched, and the edge inputs
+  * (an empty batch, a batch of exact re-sends) leave no state behind. */
 class StreamingIngestSpec extends SparkSpec {
   import spark.implicits._
 
   private val cols = Seq("doc_id", "lang", "source", "text", "n_chars")
+
+  private def evidence(df: DataFrame): Seq[(Long, String)] = df
+    .select(col("doc_id"), col("source"), col("n_segments"),
+      col("n_removed"), col("survivor"), col("n_dirty_13grams"),
+      col("containment_e6"), col("predicted"), col("margin_e16"),
+      col("verdict"))
+    .collect().toSeq
+    .map(r => r.getLong(0) -> r.mkString("|")).sortBy(_._1)
 
   test("streaming ingest warehouse replay equals the per-chunk batch " +
       "capstone over initial ∪ kept-so-far") {
@@ -49,13 +58,6 @@ class StreamingIngestSpec extends SparkSpec {
     chunks.foreach { c => input.addData(c); q.processAllAvailable() }
     q.stop()
 
-    def evidence(df: DataFrame): Seq[(Long, String)] = df
-      .select(col("doc_id"), col("source"), col("n_segments"),
-        col("n_removed"), col("survivor"), col("n_dirty_13grams"),
-        col("containment_e6"), col("predicted"), col("margin_e16"),
-        col("verdict"))
-      .collect().toSeq
-      .map(r => r.getLong(0) -> r.mkString("|")).sortBy(_._1)
     def readDecisions() = spark.read.parquet(s"$whDir/decisions")
       .localCheckpoint(true)
     val streamedAll = readDecisions()
@@ -225,5 +227,90 @@ class StreamingIngestSpec extends SparkSpec {
       .where(col("batch") === 1).head()
     assert(d1.getAs[String]("verdict") == "exact_dup" &&
       d1.getAs[Long]("survivor") == keptId)
+  }
+
+  /** The state directories a micro-batch appends its deltas to. */
+  private val deltaDirs = Seq("seg_hashes", "exact_classes", "bands", "docs",
+    "word_counts", "doc_counts", "bin_deltas")
+
+  /** A warehouse bootstrapped from the non-batch sf0.001 docs < 300
+    * (the replay tests' split), plus that split's batch docs. */
+  private def bootstrapped(tag: String): (String, DataFrame, DataFrame, DataFrame) = {
+    val docs = graft.Tables.documents(spark,
+        s"${sys.props("user.home")}/testdata/sf0.001")
+      .filter(col("doc_id") < 300)
+      .select(cols.map(col): _*)
+      .localCheckpoint(true)
+    val isBatch = col("doc_id") % 7 === 0
+    val warehouse0 = docs.filter(!isBatch)
+    val benchmark = docs.filter(!isBatch && col("doc_id") % 10 === 0)
+    val whDir = java.nio.file.Files
+      .createTempDirectory(s"graft-stream-ingest-$tag").toString
+    StreamingIngest.bootstrap(whDir, warehouse0, benchmark,
+      "doc_id", "lang", "source", "text", "n_chars")
+    (whDir, warehouse0, benchmark, docs.filter(isBatch))
+  }
+
+  private def sink(whDir: String)(batch: DataFrame, id: Long): Unit =
+    StreamingIngest.ingestSink(whDir, "doc_id", "lang", "source",
+      "text", "n_chars")(batch, id)
+
+  private def deltaRows(whDir: String, dir: String, id: Long): Long =
+    spark.read.parquet(s"$whDir/$dir").where(col("batch") === id).count()
+
+  private def planRows(whDir: String, id: Long): Seq[String] =
+    spark.read.parquet(s"$whDir/plan/batch=$id")
+      .select(col("source"), col("weight"), col("shard"))
+      .collect().map(_.mkString("|")).toSeq.sorted
+
+  test("edge input: an empty micro-batch decides nothing, appends no " +
+      "state, carries the plan forward, and the next batch still decides") {
+    val (whDir, warehouse0, benchmark, batchDocs) = bootstrapped("empty")
+    sink(whDir)(batchDocs.limit(0), 0L)
+    assert(spark.read.parquet(s"$whDir/decisions")
+      .where(col("batch") === 0).count() == 0)
+    deltaDirs.foreach(d => assert(deltaRows(whDir, d, 0L) == 0, d))
+    assert(planRows(whDir, 0L) === planRows(whDir, -1L))
+
+    // batch 1 sees exactly the bootstrap corpus: its verdicts equal
+    // the batch capstone over the initial warehouse
+    val chunk = batchDocs.localCheckpoint(true)
+    sink(whDir)(chunk, 1L)
+    val got = spark.read.parquet(s"$whDir/decisions")
+      .where(col("batch") === 1)
+    val expected = IngestCapstone.ingestDecisions(warehouse0, chunk,
+      benchmark, "doc_id", "lang", "source", "text", "n_chars")
+    assert(got.count() == chunk.count())
+    assert(evidence(got) === evidence(expected))
+  }
+
+  test("edge input: a batch of exact re-sends of accepted docs is all " +
+      "exact_dup and adds no rows to the warehouse state") {
+    val (whDir, _, _, batchDocs) = bootstrapped("resend")
+    sink(whDir)(batchDocs, 0L)
+    val kept = spark.read.parquet(s"$whDir/decisions")
+      .where(col("batch") === 0 && col("verdict") === "kept")
+      .select(col("doc_id"))
+    assert(kept.count() > 0)
+    // re-sends carry fresh (larger) ids, as a re-submitted doc does
+    val resends = batchDocs.join(kept, Seq("doc_id"), "left_semi")
+      .withColumn("doc_id", col("doc_id") + 100000L)
+      .select(cols.map(col): _*)
+      .localCheckpoint(true)
+    sink(whDir)(resends, 1L)
+    val got = spark.read.parquet(s"$whDir/decisions")
+      .where(col("batch") === 1)
+      .select(col("doc_id"), col("verdict"), col("survivor"))
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+      .toSeq.sortBy(_._1)
+    assert(got.map(_._1) ===
+      resends.select(col("doc_id")).collect().map(_.getLong(0)).toSeq.sorted)
+    // each re-send points at the accepted original it copies
+    got.foreach { case (id, verdict, survivor) =>
+      assert(verdict == "exact_dup" && survivor == id - 100000L,
+        s"doc $id: $verdict / $survivor")
+    }
+    deltaDirs.foreach(d => assert(deltaRows(whDir, d, 1L) == 0, d))
+    assert(planRows(whDir, 1L) === planRows(whDir, 0L))
   }
 }
