@@ -28,6 +28,10 @@ import org.apache.spark.sql.SparkSession
   *     external stall;
   *   - "floor"/"floor_post": the 1-row job floor measured before AND
   *     after the suite — if the floor itself moved, the box moved.
+  *
+  * A line that fails reads -1.0 and prints one stderr line, the
+  * `{"query", "exception", "message"}` record Verify writes to
+  * failures.json; stderr ends with `[bench] measured N/M, failed K: …`.
   */
 object Bench {
 
@@ -69,6 +73,14 @@ object Bench {
     // with SaveMode.Overwrite.
     val thunks = scala.collection.mutable.LinkedHashMap.empty[String, () => Unit]
 
+    /** A failed line: the -1.0 sentinel, plus one stderr line in
+      * Verify's failures.json record shape. */
+    def failed(name: String, e: Throwable,
+               at: Double = (System.nanoTime() - suiteT0) / 1e9): Measure = {
+      System.err.println(Verify.failureRecord(name, e))
+      Measure(name, -1.0, Seq(), 0.0, at)
+    }
+
     /** Warm-up once, time `runs` runs, keep every sample + GC delta. */
     def measure(name: String, f: => Unit): Measure = {
       val at = (System.nanoTime() - suiteT0) / 1e9
@@ -80,7 +92,7 @@ object Bench {
         val gcSec = (gcMillis - gc0) / 1e3
         Measure(name, samples.sorted.apply(samples.size / 2), samples, gcSec, at)
       } catch {
-        case _: Throwable => Measure(name, -1.0, Seq(), 0.0, at)
+        case e: Throwable => failed(name, e, at)
       }
     }
 
@@ -108,19 +120,13 @@ object Bench {
     // so the DuckDB comparison (whose oracle twins train inline) stays
     // apples-to-apples: total = train line + steady line, same work.
     type QueryFn = (SparkSession, String) => org.apache.spark.sql.DataFrame
-    // Each train line is gated on ITS OWN steady query being selected
-    // (r7 ADVICE: ONLY=q132_pq_adc_topk used to measure BOTH trains).
-    val want132 = only.forall(_.contains("q132_pq_adc_topk"))
-    val want133 = only.forall(_.contains("q133_ivfpq_topk"))
     // The indexed override must answer exactly what the oracle-gated
     // inline query fn answers (r7 ADVICE: the bench would otherwise
     // report an oracle-green label for a path that was never verified).
     // One-time assert per bench run: collect both, compare sorted rows.
-    // Divergence throws AssertionError specifically so the splitPrep
-    // catch below can rethrow it (r8 ADVICE: the blanket catch used to
-    // swallow the require, silently falling back to the inline path —
-    // the exact silence this assert exists to prevent). The catch only
-    // absorbs environmental failures (e.g. missing embeddings parquet).
+    // Divergence throws AssertionError and ends the run (r8 ADVICE: a
+    // blanket catch once swallowed it, silently falling back to the
+    // inline path — the exact silence this assert exists to prevent).
     def assertMatchesInline(name: String, indexed: QueryFn): QueryFn = {
       val inline = SparkEntry.queries(name)(spark, sfDir).collect()
         .map(_.toString).sorted.toSeq
@@ -129,54 +135,66 @@ object Bench {
         s"$name indexed bench path diverges from the oracle-verified inline path")
       indexed
     }
-    val splitPrep: Option[(Seq[Measure], Map[String, QueryFn])] =
-      if (!want132 && !want133) None
-      else try {
-        import org.apache.spark.sql.functions.col
-        import graft.operators.{IvfPq, ProductQuantizer}
-        val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-        val trains = Seq.newBuilder[Measure]
-        val over = Map.newBuilder[String, QueryFn]
-        if (want132) {
-          // q132 contract: corpus = ALL vectors, query = MIN(vec_id)'s
+    // A missing embeddings table is the one case that skips the split
+    // (the suite line then times the inline query). Any other failure
+    // marks the train line failed and makes the steady line fail with
+    // the same cause, so neither line silently times something else.
+    // Each train line is gated on ITS OWN steady query being selected
+    // (r7 ADVICE: ONLY=q132_pq_adc_topk used to measure BOTH trains).
+    val hasEmbeddings = new java.io.File(s"$sfDir/embeddings.parquet").exists
+    def splitLine(query: String, train: String)(
+        prep: => (() => Unit, QueryFn)): Option[(Measure, (String, QueryFn))] =
+      if (!hasEmbeddings || !only.forall(_.contains(query))) None
+      else {
+        def failing(e: Throwable): QueryFn = (_, _) => throw e
+        try {
+          val (build, indexed) = prep
+          val m = measure(train, build())
+          val steady = try assertMatchesInline(query, indexed) catch {
+            case e: AssertionError => throw e
+            case e: Throwable => failing(e)
+          }
+          Some(m -> (query -> steady))
+        } catch {
+          case e: AssertionError => throw e
+          case e: Throwable => Some(failed(train, e) -> (query -> failing(e)))
+        }
+      }
+    val splitPrep: Seq[(Measure, (String, QueryFn))] = {
+      import org.apache.spark.sql.functions.col
+      import graft.operators.{IvfPq, ProductQuantizer}
+      lazy val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      Seq(
+        // q132 contract: corpus = ALL vectors, query = MIN(vec_id)'s
+        splitLine("q132_pq_adc_topk", "x132_pq_train") {
           val q132Probe = emb.orderBy(col("vec_id").asc)
             .select(col("embedding")).head().getSeq[Float](0)
-          trains += measure("x132_pq_train", {
-            ProductQuantizer.buildPqIndex(emb, "vec_id", "embedding",
-              "bench_q132_pq", m = 8, k = 64, iters = 1)
-            ()
-          })
-          over += "q132_pq_adc_topk" -> assertMatchesInline("q132_pq_adc_topk",
+          (() => { ProductQuantizer.buildPqIndex(emb, "vec_id", "embedding",
+              "bench_q132_pq", m = 8, k = 64, iters = 1); () },
             (s: SparkSession, _: String) =>
               ProductQuantizer.adcRerankTopKIndexed(s, "bench_q132_pq", emb,
                 "vec_id", "embedding", q132Probe, shortlist = 100, k = 10))
-        }
-        if (want133) {
-          // q133 contract: probe = vec_id 0's vector, corpus excludes it
+        },
+        // q133 contract: probe = vec_id 0's vector, corpus excludes it
+        splitLine("q133_ivfpq_topk", "x133_ivfpq_train") {
           val probe0 = emb.filter(col("vec_id") === 0)
             .select("embedding").head().getSeq[Float](0)
           val corpus = emb.filter(col("vec_id") =!= 0)
-          trains += measure("x133_ivfpq_train",
-            IvfPq.build(corpus, "vec_id", "embedding", "bench_q133_ivfpq",
-              numCells = 8, m = 8, codesK = 64, iters = 1))
-          over += "q133_ivfpq_topk" -> assertMatchesInline("q133_ivfpq_topk",
+          (() => IvfPq.build(corpus, "vec_id", "embedding", "bench_q133_ivfpq",
+              numCells = 8, m = 8, codesK = 64, iters = 1),
             (s: SparkSession, _: String) =>
               IvfPq.topKIndexed(s, "bench_q133_ivfpq", corpus,
                 "vec_id", "embedding", probe0, k = 10, nprobe = 2,
                 shortlist = 100))
-        }
-        Some((trains.result(), over.result()))
-      } catch {
-        case e: AssertionError => throw e // indexed-path divergence: loud
-        case _: Throwable      => None    // environmental (no embeddings)
-      }
-    val steadyOverride = splitPrep.map(_._2).getOrElse(Map.empty[String, QueryFn])
+        }).flatten
+    }
+    val steadyOverride = splitPrep.map(_._2).toMap
 
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(q => only.forall(_.contains(q._1)))
       .map { case (name, fn) =>
         measure(name, force(steadyOverride.getOrElse(name, fn)(spark, sfDir)))
-      } ++ splitPrep.toSeq.flatMap(_._1)
+      } ++ splitPrep.map(_._1)
 
     // persisted-ANN paths: index build timed once, indexed query timed like
     // a normal query — shows the per-query saving vs q43/q59's recompute.
@@ -244,14 +262,14 @@ object Bench {
       Seq(
         mSqBuild, mSq, mIvfApp, mIvfPqApp, mLshBuild, mLsh,
         mIvfBuild, mIvf, mPqBuild, mPq, mIvfPqBuild, mIvfPq)
-    } catch { case _: Throwable =>
+    } catch { case e: Throwable =>
       Seq("x_ann_lsh_index_build", "x_ann_lsh_index_query",
         "x_ann_ivf_index_build", "x_ann_ivf_index_query",
         "x_ann_pq_index_build", "x_ann_pq_index_query",
         "x_ann_ivfpq_index_build", "x_ann_ivfpq_index_query",
         "x_ann_sq8_index_build", "x_ann_sq8_index_query",
         "x_ann_ivf_append", "x_ann_ivfpq_append")
-        .map(Measure(_, -1.0, Seq(), 0.0, (System.nanoTime() - suiteT0) / 1e9))
+        .map(failed(_, e))
     }
 
     // Schema'd-ingestion demo: q21 pays a JSON parse per row per query;
@@ -278,9 +296,9 @@ object Bench {
           .filter(col("n") > 0)
           .orderBy(col("event_type"))))
       Seq(mBuild, m)
-    } catch { case _: Throwable =>
+    } catch { case e: Throwable =>
       Seq("x_json_ingest_build", "x_json_ingested_query")
-        .map(Measure(_, -1.0, Seq(), 0.0, (System.nanoTime() - suiteT0) / 1e9))
+        .map(failed(_, e))
     }
 
     // Bucketed-SCD2-history as-of probe (r6, VERDICT item 4): q125 pays
@@ -313,9 +331,9 @@ object Bench {
           Seq("user_id"), "t", "valid_from",
           payload = Seq("active_type", "version"))))
       Seq(mBuild, m)
-    } catch { case _: Throwable =>
+    } catch { case e: Throwable =>
       Seq("x_asof_hist_build", "x_asof_hist_query")
-        .map(Measure(_, -1.0, Seq(), 0.0, (System.nanoTime() - suiteT0) / 1e9))
+        .map(failed(_, e))
     }
 
     // Persisted ingest-state capstone probe (r13, VERDICT r12 #1): the
@@ -347,9 +365,9 @@ object Bench {
             "doc_id", "lang", "source", "text", "n_chars"),
           "doc_id", "lang", "source", "text", "n_chars")))
       Seq(mBuild, m)
-    } catch { case _: Throwable =>
+    } catch { case e: Throwable =>
       Seq("x_ingest_state_build", "x_ingest_state_probe")
-        .map(Measure(_, -1.0, Seq(), 0.0, (System.nanoTime() - suiteT0) / 1e9))
+        .map(failed(_, e))
     }
 
     // Data-dominated scale point: when the 10×-replicated dataset exists
@@ -515,9 +533,9 @@ object Bench {
           force(IvfIndex.topKIndexed(spark, "bench_ivf256_idx",
             "vec_id", "embedding", probe, k = 10, nprobe = 8)))
         Seq(mBuild, m)
-      } catch { case _: Throwable =>
+      } catch { case e: Throwable =>
         Seq("x10_ann_ivf256_index_build", "x10_ann_ivf256_index_query")
-          .map(Measure(_, -1.0, Seq(), 0.0, (System.nanoTime() - suiteT0) / 1e9))
+          .map(failed(_, e))
       }
 
     val floorPost = measureFloor()
@@ -753,6 +771,10 @@ object Bench {
     require(finalLine.length < 1900,
       s"final bench line ${finalLine.length} chars >= 1900 — would be tail-truncated")
     println(finalLine)
+    val failedNames = all.filter(_.median < 0).map(_.name)
+    System.err.println(s"[bench] measured ${all.size - failedNames.size}/${all.size}, " +
+      s"failed ${failedNames.size}" +
+      (if (failedNames.isEmpty) "" else failedNames.mkString(": ", ", ", "")))
     spark.stop()
   }
 }

@@ -1,19 +1,17 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import scala.concurrent.duration._
 
 /** The one session profile every entry point runs under — Bench, Verify,
   * DevProbe, PlanFormat and the test specs — so the plan Verify checks
-  * is the plan Bench measures. */
+  * is the plan Bench measures. Every Spark action runs on the calling
+  * thread: the engine starts no driver thread pool of its own, so no
+  * driver-side wait outlives the job it waits on (NoDriverThreadsSpec
+  * pins this). */
 object GraftSession {
   /** Local cores: `SPARK_GRAFT_CPUS`, else every available processor. */
   val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors)
-
-  /** Upper bound on any driver-side wait for a concurrent Spark action:
-    * far beyond any real job, so it only fires on a wedged one. */
-  val driverWait: FiniteDuration = 1.hour
 
   def local(): SparkSession = SparkSession.builder()
     .master(s"local[$cpus]")

@@ -43,16 +43,20 @@ object Verify {
         Some(name -> e)
       }
     }
-    val record = failures.map { case (name, e) =>
-      s"{${q("query")}: ${q(name)}, ${q("exception")}: ${q(e.getClass.getName)}, " +
-        s"${q("message")}: ${q(String.valueOf(e.getMessage))}}"
-    }.mkString("[", ",\n", "]")
+    val record = failures.map { case (name, e) => failureRecord(name, e) }
+      .mkString("[", ",\n", "]")
     Files.writeString(Paths.get(s"$outDir/failures.json"), record)
     val names = failures.map(_._1)
     System.err.println(s"[verify] dumped ${queries.size - names.size}/${queries.size}, " +
       s"failed ${names.size}" + (if (names.isEmpty) "" else names.mkString(": ", ", ", "")))
     names
   }
+
+  /** One `{"query", "exception", "message"}` record — the element shape
+    * of `failures.json`, also Bench's stderr line for a failed line. */
+  def failureRecord(name: String, e: Throwable): String =
+    s"{${q("query")}: ${q(name)}, ${q("exception")}: ${q(e.getClass.getName)}, " +
+      s"${q("message")}: ${q(String.valueOf(e.getMessage))}}"
 
   // JSON string escape: backslash, quote, and ALL control chars (<0x20)
   // — a tab or CR in builder-authored SQL would otherwise make the

@@ -20,19 +20,12 @@ import graft.functions.VectorOps
   */
 object IvfIndex {
 
-  /** Deterministic centroid choice: the k rows with smallest
-    * md5(id-as-string) — a uniform pseudo-random pick that DuckDB computes
-    * identically (md5 hex compares lexicographically in both engines), so
-    * the whole IVF query is oracle-verifiable. Returns (cell_id, centroid
-    * vector as Seq[Float]). */
+  /** Deterministic centroid choice: [[KMeans.seedRows]] — the k rows
+    * with smallest (md5(id-as-string), id), a pick DuckDB computes
+    * identically, so the whole IVF query is oracle-verifiable. Returns
+    * (cell_id, centroid vector as Seq[Float]). */
   def centroids(df: DataFrame, idCol: String, vecCol: String, k: Int): Array[(Int, Seq[Float])] =
-    df.select(col(idCol), col(vecCol))
-      .withColumn("__h", md5(col(idCol).cast("string")))
-      .orderBy(col("__h"), col(idCol))
-      .limit(k)
-      .collect()
-      .zipWithIndex
-      .map { case (row, i) => (i, row.getSeq[Float](1)) }
+    KMeans.seedRows(df, idCol, vecCol, k).zipWithIndex.map(_.swap)
 
   /** Row-local nearest-centroid assignment: one `graft_argmax_cosine`
     * kernel call over the broadcast centroid literal. Cell ids are the
@@ -103,12 +96,8 @@ object IvfIndex {
     * cells; centroids go to a tiny sibling `<table>_centroids` table. */
   def build(df: DataFrame, idCol: String, vecCol: String, table: String,
             numCells: Int = 8, buckets: Int = 8): Unit = {
-    val spark = df.sparkSession
-    import spark.implicits._
     val cents = centroids(df, idCol, vecCol, numCells)
-    cents.toSeq.toDF("ivf_cell", "centroid")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .format("parquet").saveAsTable(table + "_centroids")
+    saveCentroids(df.sparkSession, table, cents)
     graft.etl.Warehouse.writeBucketed(
       assignCells(df, vecCol, cents), table, idCol, buckets,
       partitionBy = Seq("ivf_cell"))
@@ -197,6 +186,16 @@ object IvfIndex {
         ordering = Seq("sim_e6", "__negid"),
         payload = payload, k = k)
       .drop("__negid")
+  }
+
+  /** Write the `<table>_centroids` sidecar (ivf_cell, centroid) that
+    * [[loadCentroids]] reads. */
+  def saveCentroids(spark: org.apache.spark.sql.SparkSession, table: String,
+                    cents: Array[(Int, Seq[Float])]): Unit = {
+    import spark.implicits._
+    cents.toSeq.toDF("ivf_cell", "centroid")
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .format("parquet").saveAsTable(table + "_centroids")
   }
 
   /** Rehydrate the centroid sidecar — an O(numCells) driver read. */

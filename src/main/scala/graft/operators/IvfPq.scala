@@ -52,18 +52,10 @@ object IvfPq {
   def build(df: DataFrame, idCol: String, vecCol: String, table: String,
             numCells: Int, m: Int, codesK: Int, iters: Int,
             buckets: Int = 8): Unit = {
-    val spark = df.sparkSession
-    import spark.implicits._
     val cents = IvfIndex.centroids(df, idCol, vecCol, numCells)
-    cents.toSeq.toDF("ivf_cell", "centroid")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .format("parquet").saveAsTable(table + "_centroids")
+    IvfIndex.saveCentroids(df.sparkSession, table, cents)
     val model = ProductQuantizer.fit(df, idCol, vecCol, m, codesK, iters)
-    (0 until model.m).flatMap(i => model.codebooks(i).zipWithIndex.map {
-      case (c, cell) => (i, cell, c)
-    }).toDF("m_idx", "cell", "centroid")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .format("parquet").saveAsTable(table + "_codebooks")
+    ProductQuantizer.saveModel(df.sparkSession, table, model)
     graft.etl.Warehouse.writeBucketed(
       ProductQuantizer.encode(IvfIndex.assignCells(df, vecCol, cents),
           vecCol, model)

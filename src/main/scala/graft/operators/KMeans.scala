@@ -21,15 +21,18 @@ import org.apache.spark.sql.functions._
   *    order-free);
   *  - centroid updates are exact floor division sum/count
   *    (`Math.floorDiv`; the oracle mirrors with the %/`//` identity);
-  *  - seeds are the k rows with smallest (md5(id), id) — the IvfIndex
-  *    idiom, identical in both engines;
+  *  - seeds are the k rows with smallest (md5(id), id) ([[seedRows]],
+  *    also IvfIndex's centroid pick), identical in both engines;
   *  - argmin ties break to the lowest cell id (array_position takes
   *    the first occurrence; the oracle sorts by (dist, cell)).
   *
-  * Scale shape: assignment is row-local over a broadcast k×d literal
-  * (the data never moves); each update is ONE map-side-combined
-  * aggregate producing k rows of d+1 longs collected to the driver —
-  * per-iteration driver traffic is O(k·d), independent of corpus size.
+  * Scale shape: one Lloyd loop ([[lloyd]]) trains m contiguous
+  * subspaces at once — m = 1 here, m > 1 for [[ProductQuantizer]]. The
+  * seed rows are collected once; each iteration is a row-local argmin
+  * per subspace over a broadcast k×(d/m) literal (the data never moves)
+  * and ONE map-side-combined aggregate keyed by (subspace, cell) that
+  * collects m·k rows of d/m+1 longs — driver traffic O(k·d) per
+  * iteration, independent of corpus size and of m.
   * Overflow headroom: |component| ≤ 2²⁰ padded to 2²¹, so per-dim sums
   * stay in-long up to ~2⁴² rows per cluster.
   */
@@ -47,17 +50,25 @@ object KMeans {
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
       lit(0L), (acc, x) => acc + x)
 
-  /** Deterministic seeds: quantized vectors of the k rows with smallest
-    * (md5(id-as-string), id) — a uniform pseudo-random pick both engines
-    * compute identically. */
-  def seeds(df: DataFrame, idCol: String, vecCol: String, k: Int): Array[Seq[Long]] = {
-    val picked = df
-      .select(quantize(col(vecCol)).as("__v"),
-        md5(col(idCol).cast("string")).as("__h"), col(idCol).as("__id"))
+  /** [[quantize]] on the driver: floor(x·2²⁰) of the float widened to
+    * double, bit-identical to the column form. */
+  def quantizeVec(v: Seq[Float]): Seq[Long] =
+    v.map(x => math.floor(x.toDouble * Scale).toLong)
+
+  /** The deterministic seed pick: raw vectors of the (up to) k rows with
+    * smallest (md5(id-as-string), id) — a uniform pseudo-random pick both
+    * engines compute identically (md5 hex compares lexicographically in
+    * both). Shared by k-means seeding and [[IvfIndex.centroids]]. */
+  def seedRows(df: DataFrame, idCol: String, vecCol: String, k: Int): Array[Seq[Float]] =
+    df.select(col(vecCol), md5(col(idCol).cast("string")).as("__h"), col(idCol).as("__id"))
       .orderBy(col("__h"), col("__id"))
       .limit(k)
       .collect()
-      .map(_.getSeq[Long](0))
+      .map(_.getSeq[Float](0))
+
+  /** Quantized seeds: exactly k of [[seedRows]], quantized on the driver. */
+  def seeds(df: DataFrame, idCol: String, vecCol: String, k: Int): Array[Seq[Long]] = {
+    val picked = seedRows(df, idCol, vecCol, k).map(quantizeVec)
     require(picked.length == k, s"corpus has only ${picked.length} rows for k=$k seeds")
     picked
   }
@@ -88,27 +99,49 @@ object KMeans {
   /** Run `iters` full Lloyd iterations (assign → exact-floor-div
     * update, empty cells carry their previous centroid) then a final
     * assignment. Returns (input + `__v` + `cellCol`, final centroids).
+    * The one-subspace case of [[lloyd]].
     */
   def fit(df: DataFrame, idCol: String, vecCol: String, k: Int, iters: Int,
           cellCol: String = "cluster_id"): (DataFrame, Array[Seq[Long]]) = {
-    require(k >= 1 && iters >= 0, s"need k>=1, iters>=0 (got k=$k iters=$iters)")
-    var cents = seeds(df, idCol, vecCol, k)
-    val d = cents.head.length
     val base = df.withColumn("__v", quantize(col(vecCol)))
-    for (_ <- 1 to iters) {
-      val assigned = assign(base, cents, "__cell")
-      val aggCols = count(lit(1)).as("__n") +:
-        (0 until d).map(i => sum(element_at(col("__v"), i + 1)).as(s"__s$i"))
-      val rows = assigned.groupBy(col("__cell"))
-        .agg(aggCols.head, aggCols.tail: _*)
-        .collect()
-      val updated = rows.map { r =>
-        val n = r.getLong(1)
-        r.getInt(0) -> (0 until d).map(j => Math.floorDiv(r.getLong(j + 2), n))
-      }.toMap
-      cents = cents.indices.map(i => updated.getOrElse(i, cents(i))).toArray
-    }
+    val cents = lloyd(base, seeds(df, idCol, vecCol, k), 1, iters).head
     (assign(base, cents, cellCol), cents)
+  }
+
+  /** The one Lloyd loop over `m` contiguous subspaces of `__v`: codebook
+    * s starts as slice s of `seeds`, and subspace s of every row is
+    * assigned and averaged against codebook s only, so the result equals
+    * m one-subspace fits on the slices. An empty cell keeps its previous
+    * centroid within its own subspace. Returns [subspace][cell] → centroid. */
+  private[operators] def lloyd(base: DataFrame, seeds: Array[Seq[Long]],
+                               m: Int, iters: Int): Array[Array[Seq[Long]]] = {
+    require(seeds.nonEmpty && iters >= 0,
+      s"need k>=1, iters>=0 (got k=${seeds.length} iters=$iters)")
+    val d = seeds.head.length
+    require(m >= 1 && d % m == 0, s"dim $d not divisible into $m subspaces")
+    val sub = d / m
+    var books = Array.tabulate(m)(s => seeds.map(_.slice(s * sub, (s + 1) * sub)))
+    for (_ <- 1 to iters) {
+      val parts = books.indices.map { s =>
+        val v = slice(col("__v"), s * sub + 1, sub)
+        struct(call_function("graft_argmin_l2", v, typedlit(books(s).toSeq)).as("c"),
+          v.as("v"))
+      }
+      val sums = (0 until sub).map(j => sum(element_at(col("__p.v"), j + 1)))
+      val updated = base.select(posexplode(array(parts: _*)).as(Seq("__s", "__p")))
+        .groupBy(col("__s"), col("__p.c"))
+        .agg(count(lit(1)), sums: _*)
+        .collect()
+        .map { r =>
+          val n = r.getLong(2)
+          (r.getInt(0), r.getInt(1)) ->
+            (0 until sub).map(j => Math.floorDiv(r.getLong(j + 3), n))
+        }.toMap
+      books = books.zipWithIndex.map { case (b, s) =>
+        b.indices.map(c => updated.getOrElse((s, c), b(c))).toArray
+      }
+    }
+    books
   }
 
   /** Nearest OTHER centroid per cell: (cellCol, nn_cell, nn_dist) — a

@@ -25,40 +25,26 @@ import org.apache.spark.sql.functions._
   * ProductQuantizerSpec; exactness of the ARITHMETIC is the oracle's
   * job, approximation quality is the spec's.
   *
-  * Scale shape: training = M × KMeans.fit (driver traffic O(M·k·subDim)
-  * per iteration); encoding = M row-local codegen'd argmin kernels over
-  * broadcast codebooks; ADC = row-local lookups + `TakeOrderedAndProject`
-  * global top-k (per-partition heads, no full sort).
+  * Scale shape: training = ONE [[KMeans.lloyd]] loop over all M
+  * subspaces — one seed collect, then per iteration one row-local
+  * argmin per subspace and one aggregate keyed by (subspace, cell)
+  * (driver traffic O(k·d) per iteration, jobs independent of M);
+  * encoding = M row-local codegen'd argmin kernels over broadcast
+  * codebooks; ADC = row-local lookups + `TakeOrderedAndProject` global
+  * top-k (per-partition heads, no full sort).
   */
 object ProductQuantizer {
 
   /** [m][cell] → centroid (quantized longs, length subDim). */
   final case class Model(m: Int, subDim: Int, codebooks: Array[Array[Seq[Long]]])
 
+  /** Train the m codebooks: subspace i's codebook is exactly what
+    * [[KMeans.fit]] gives on slice i alone, all trained in one loop. */
   def fit(df: DataFrame, idCol: String, vecCol: String,
           m: Int, k: Int, iters: Int): Model = {
-    val d = df.select(size(col(vecCol)).as("d")).head().getInt(0)
-    require(m >= 1 && d % m == 0, s"dim $d not divisible into $m subspaces")
-    val sub = d / m
-    // The m sub-quantizers are independent (PQ's defining property), so
-    // their Lloyd jobs run CONCURRENTLY — each fit's assignment jobs are
-    // small (one slice of the corpus), and sequential fits left most of
-    // the scheduler idle. Results are deterministic regardless of
-    // scheduling (each fit is a pure function of its slice); measured
-    // at sf0.1: x132 train 2.6 -> see BASELINE r8.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    // Bounded await (r8 VERDICT): Duration.Inf hung forever if a Lloyd
-    // job was interrupted; an hour is far beyond any real fit (sf0.1
-    // trains in seconds, and the fits are sample-bound at scale) so a
-    // timeout here only ever fires on a genuinely wedged job.
-    val books = Await.result(
-      Future.sequence((0 until m).map { i =>
-        Future(KMeans.fit(
-          df.withColumn("__sub", slice(col(vecCol), i * sub + 1, sub)),
-          idCol, "__sub", k, iters, "__pqc")._2)
-      }), graft.GraftSession.driverWait).toArray
-    Model(m, sub, books)
+    val books = KMeans.lloyd(df.select(KMeans.quantize(col(vecCol)).as("__v")),
+      KMeans.seeds(df, idCol, vecCol, k), m, iters)
+    Model(m, books.head.head.length, books)
   }
 
   /** Adds `pq_code` (array<int>, length m): per subspace, the nearest
@@ -76,16 +62,12 @@ object ProductQuantizer {
   private def sqDistLong(a: Seq[Long], b: Seq[Long]): Long =
     a.zip(b).map { case (x, y) => val z = x - y; z * z }.sum
 
-  /** Quantize a raw float query exactly as [[KMeans.quantize]] does. */
-  def quantizeQuery(q: Seq[Float]): Seq[Long] =
-    q.map(x => math.floor(x.toDouble * KMeans.Scale).toLong)
-
   /** ADC top-k: approximate distance = Σ_m table_m[code_m], where
     * table_m holds the exact distances query-subvector → every centroid
     * of subspace m. Ties break on `idCol`. Input must carry `pq_code`. */
   def adcTopK(encoded: DataFrame, idCol: String, model: Model,
               query: Seq[Float], k: Int): DataFrame = {
-    val qv = quantizeQuery(query)
+    val qv = KMeans.quantizeVec(query)
     require(qv.length == model.m * model.subDim,
       s"query dim ${qv.length} != ${model.m * model.subDim}")
     val tables = (0 until model.m).map { i =>
@@ -127,7 +109,7 @@ object ProductQuantizer {
   private[operators] def rerank(vectors: DataFrame, short: DataFrame,
                                 idCol: String, vecCol: String,
                                 query: Seq[Float], k: Int): DataFrame = {
-    val qv = quantizeQuery(query)
+    val qv = KMeans.quantizeVec(query)
     vectors.select(col(idCol), col(vecCol))
       .join(short.select(col(idCol)), Seq(idCol))
       .withColumn("exact_dist",
@@ -148,18 +130,24 @@ object ProductQuantizer {
     * encoding run ONCE here; [[adcTopKIndexed]] never re-runs either. */
   def buildPqIndex(df: DataFrame, idCol: String, vecCol: String, table: String,
                    m: Int, k: Int, iters: Int, buckets: Int = 8): Model = {
-    val spark = df.sparkSession
-    import spark.implicits._
     val model = fit(df, idCol, vecCol, m, k, iters)
+    saveModel(df.sparkSession, table, model)
+    graft.etl.Warehouse.writeBucketed(
+      encode(df, vecCol, model).select(col(idCol), col("pq_code")),
+      table, idCol, buckets)
+    model
+  }
+
+  /** Write the `<table>_codebooks` sidecar (m_idx, cell, centroid) that
+    * [[loadModel]] reads. */
+  def saveModel(spark: org.apache.spark.sql.SparkSession, table: String,
+                model: Model): Unit = {
+    import spark.implicits._
     (0 until model.m).flatMap(i => model.codebooks(i).zipWithIndex.map {
       case (c, cell) => (i, cell, c)
     }).toDF("m_idx", "cell", "centroid")
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .format("parquet").saveAsTable(table + "_codebooks")
-    graft.etl.Warehouse.writeBucketed(
-      encode(df, vecCol, model).select(col(idCol), col("pq_code")),
-      table, idCol, buckets)
-    model
   }
 
   /** Rehydrate a persisted model from the `<table>_codebooks` sidecar —

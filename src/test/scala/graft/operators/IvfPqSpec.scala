@@ -78,7 +78,7 @@ class IvfPqSpec extends SparkSpec {
     // pruned nprobe=2 form keeps a conservative floor.
     def exactTop(q: Seq[Float]): Set[Long] =
       corpus.withColumn("d", KMeans.sqDist(KMeans.quantize(col("embedding")),
-          typedlit(ProductQuantizer.quantizeQuery(q))))
+          typedlit(KMeans.quantizeVec(q))))
         .orderBy(col("d").asc, col("vec_id").asc).limit(10)
         .collect().map(_.getLong(0)).toSet
     val truth = exactTop(probe)

@@ -15,7 +15,7 @@ class ProductQuantizerSpec extends SparkSpec {
 
   private def exactTop10(q: Seq[Float]): Set[Long] =
     emb.withColumn("d", KMeans.sqDist(KMeans.quantize(col("embedding")),
-        typedlit(ProductQuantizer.quantizeQuery(q))))
+        typedlit(KMeans.quantizeVec(q))))
       .orderBy(col("d").asc, col("vec_id").asc).limit(10)
       .collect().map(_.getLong(0)).toSet
 
@@ -69,7 +69,7 @@ class ProductQuantizerSpec extends SparkSpec {
   test("adc distance is the sum of per-subspace table entries (spot check)") {
     val q = emb.orderBy(col("vec_id").asc)
       .select("embedding").head().getSeq[Float](0)
-    val qv = ProductQuantizer.quantizeQuery(q)
+    val qv = KMeans.quantizeVec(q)
     val row = ProductQuantizer.adcTopK(encoded, "vec_id", model, q, 1).head()
     val code = encoded.filter(col("vec_id") === row.getLong(0))
       .select("pq_code").head().getSeq[Int](0)
@@ -79,5 +79,87 @@ class ProductQuantizerSpec extends SparkSpec {
       qs.zip(c).map { case (x, y) => val z = x - y; z * z }.sum
     }.sum
     assert(row.getLong(1) === expected)
+  }
+
+  // 12 rows of 8 dims = 4 subspaces of 2. The k = 3 seeds are the rows
+  // with the smallest md5(id). Subspace 0 gives seeds 0 and 1 the same
+  // slice, so cell 1 wins no row in the first update (ties go to the
+  // lower cell) and carries its seed forward while cell 0 moves.
+  // Subspace 1 gives every row its own slice, so no cell starts empty.
+  private def md5hex(s: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
+  private lazy val handCorpus = {
+    val seedIds = (0L until 12L).sortBy(i => md5hex(i.toString)).take(3)
+    val rnd = new scala.util.Random(5)
+    (0L until 12L).map { i =>
+      val s0 =
+        if (i == seedIds(0) || i == seedIds(1)) Seq(0.0f, 0.0f)
+        else if (i == seedIds(2)) Seq(1.0f, 0.0f)
+        else Seq((i % 4) * 0.3f - 0.2f, (i % 3) * 0.1f)
+      val s1 = Seq(math.cos(i.toDouble).toFloat, math.sin(i.toDouble).toFloat)
+      (i, s0 ++ s1 ++ Seq.fill(4)(rnd.nextFloat() * 2 - 1))
+    }.toDF("vec_id", "embedding")
+  }
+  private def subspace(i: Int) =
+    handCorpus.withColumn("__sub", slice(col("embedding"), i * 2 + 1, 2))
+
+  test("joint fit: every subspace's codebook equals KMeans.fit on its slice " +
+      "(iters 0, 1, 3; empty-cell carry-forward per subspace)") {
+    def firstCells(i: Int): Long = {
+      val sub = subspace(i)
+      KMeans.assign(sub.withColumn("__v", KMeans.quantize(col("__sub"))),
+          KMeans.seeds(sub, "vec_id", "__sub", 3), "__c")
+        .select("__c").distinct().count()
+    }
+    assert(firstCells(0) < 3, "subspace 0 must start with an empty cell")
+    assert(firstCells(1) === 3, "subspace 1 must start with no empty cell")
+    for (iters <- Seq(0, 1, 3)) {
+      val model = ProductQuantizer.fit(handCorpus, "vec_id", "embedding",
+        m = 4, k = 3, iters = iters)
+      assert(model.m === 4 && model.subDim === 2)
+      (0 until 4).foreach { i =>
+        val (_, cents) = KMeans.fit(subspace(i), "vec_id", "__sub", 3, iters)
+        assert(model.codebooks(i).toSeq === cents.toSeq,
+          s"iters=$iters subspace $i")
+      }
+    }
+  }
+
+  test("fit runs the same number of Spark jobs at m = 8 as at m = 1") {
+    val vecs = spark.read.parquet(s"$sf/embeddings.parquet")
+    val started = new java.util.concurrent.atomic.AtomicLong(0L)
+    val ended = new java.util.concurrent.atomic.AtomicLong(0L)
+    // every job of the context, whichever thread submits it
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.incrementAndGet()
+      override def onJobEnd(
+          e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        ended.incrementAndGet()
+    }
+    // events drain in order: once every job seen starting has been seen
+    // ending, the run's jobs are all counted (DevProbe's settle)
+    def settle(): Unit = {
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (started.get == 0L || ended.get < started.get) {
+        assert(System.nanoTime() < deadline,
+          s"listener saw ${ended.get} of ${started.get} jobs end within 60 s")
+        Thread.sleep(5)
+      }
+    }
+    def jobs(m: Int): Long = {
+      val j0 = started.get
+      ProductQuantizer.fit(vecs, "vec_id", "embedding", m = m, k = 16, iters = 1)
+      settle()
+      started.get - j0
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val one = jobs(1)
+      val eight = jobs(8)
+      assert(eight === one, s"m=8 ran $eight jobs, m=1 ran $one")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }
